@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver bench contract: run every registered query at
   * SPARK_GRAFT_SF_DIR, print exactly ONE line on stdout — the JSON
@@ -13,7 +12,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = SparkEntry.envCpus
     // co-tenant load is the #1 confound in archived records (r9's
     // total read 119 s loaded vs 90 s quiet; r10 archived load1 5.03
     // while three quiet runs measured 26% faster) — so the bench now
@@ -21,21 +20,18 @@ object Bench {
     // load to fall under the threshold before measuring anything,
     // polling every 15 s up to a deadline (default 10 min — a capped
     // wait, so a driver run on a permanently busy box still
-    // completes, with the honest load stamped). SPARK_GRAFT_LOAD_GATE
-    // overrides the threshold; 0 disables the gate.
+    // completes, with the honest load stamped).
     def load1(): Double = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
-    val gate = sys.env.get("SPARK_GRAFT_LOAD_GATE").map(_.toDouble)
-      .getOrElse(0.5)
-    def waitQuiet(maxMinutes: Int): Unit =
-      if (gate > 0 && load1() >= gate) {
-        val deadline = System.nanoTime() + maxMinutes * 60L * 1000000000L
-        while (load1() >= gate && System.nanoTime() < deadline) {
-          System.err.println(f"[bench] load1=${load1()}%.2f >= $gate%.2f — " +
-            "waiting for a quiet machine (gate: VERDICT r10 #2)")
-          Thread.sleep(15000)
-        }
+    val gate = 0.5
+    def waitQuiet(maxMinutes: Int): Unit = {
+      val deadline = System.nanoTime() + maxMinutes * 60L * 1000000000L
+      while (load1() >= gate && System.nanoTime() < deadline) {
+        System.err.println(f"[bench] load1=${load1()}%.2f >= $gate%.2f — " +
+          "waiting for a quiet machine (gate: VERDICT r10 #2)")
+        Thread.sleep(15000)
       }
+    }
     waitQuiet(10)
     val loadAtStart = load1()
     // Mid-run co-tenancy evidence. load1 cannot provide it: a 32-thread
@@ -59,34 +55,11 @@ object Bench {
     // cores, GC fraction) across that query's runs.
     final case class RunStats(sec: Double, ext: Double, io: Double,
         mem: Double, cpu: Double, steal: Double, gc: Double, ok: Boolean)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // ContextCleaner reclaims broadcasts/shuffles/checkpoints only
-      // when a GC notices dead references; the default periodic-GC
-      // interval (30 min) never fires inside a bench run, so driver
-      // state accumulated over ~60 queries degraded the tail of the
-      // run (q55 measured 5x slower at position 55 than in isolation).
-      // Round 4 set the interval to 30s, which fixed the tail but made
-      // full GCs land at random *inside* timed queries (BENCH_r08's
-      // q54 read 9.4 s for a 0.6 s scan+agg). The harness now triggers
-      // the GC itself between queries, outside the timed window, so
-      // the periodic timer only needs to cover the longest queries.
-      .config("spark.cleaner.periodicGC.interval", "10min")
-      // Cached plans compile WITHOUT AQE under the Spark default
-      // (false), preserving a cache's output partitioning. Measured
-      // BOTH ways on this surface (r18): enabling it helps
-      // cache-composed stored probes (q106 2.8 vs 3.7) but costs the
-      // cache-chained prefix-filter family 2-3x (q166 5.9 vs 1.9 —
-      // every cache in the chain becomes its own adaptive stage
-      // barrier), so the default stays off; the env knob exists
-      // because the right setting is workload-shaped, not universal.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHED_AQE", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the 10 min cleaner timer only covers the longest queries: runOne
+    // GCs between queries itself, outside the timed window (round 4's
+    // 30 s timer landed full GCs inside timed queries — BENCH_r08's
+    // q54 read 9.4 s for a 0.6 s scan+agg)
+    val spark = SparkEntry.localSession(cpus, "10min")
     // Untimed warm-up: exercise the parquet reader, shuffle/broadcast
     // joins, window functions, and decimal aggregation on the tiny
     // nation/region tables so the first timed query doesn't pay ~6 s
@@ -219,22 +192,7 @@ object Bench {
             System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
         }
         best = math.min(best, (System.nanoTime() - t0) / 1e9)
-        graft.pipeline.Similarity.releaseResult()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        // The RDD unpersist drops BLOCKS but leaves the CacheManager's
-        // logical-plan -> InMemoryRelation entries alive, so any later
-        // query whose plan contains a matching fragment is silently
-        // routed through a gutted cache and re-pays columnar
-        // re-serialization on every run ("Asked to cache already
-        // cached data" in the logs is the tell). Measured: with the
-        // store_build1 pre-pass's build-time caches left registered,
-        // q110 read 11.7-14.0 s at slot 175 vs 8.7 s with no stale
-        // entries, and a dozen embedding/CC-heavy mid-pack slots
-        // carried +0.6-1.0 s each. clearCache() is the complete form
-        // of the hygiene this block always intended ("nothing crosses
-        // query boundaries by design").
-        spark.catalog.clearCache()
+        SparkEntry.release(spark)
         val burstSec = (System.nanoTime() - burst0) / 1e9
         continue = ok && burst && burstSec < 1.5 && extraRuns < 4
         if (continue) extraRuns += 1
@@ -307,8 +265,7 @@ object Bench {
     // load just under the old gate sailed through untouched and the
     // tail read 1.5-1.8x the quiet-hour profile. Under 0.25 external
     // cores the kept minima are quiet by construction (VERDICT r12 #2).
-    val retryGate = sys.env.get("SPARK_GRAFT_EXT_RETRY").map(_.toDouble)
-      .getOrElse(0.25)
+    val retryGate = 0.25
     // The io/memory-stall retry gate (VERDICT r14 #1). 0.10 = the
     // window spent 10% of its wall stalled on disk or memory — far
     // above the self-cost of any query here (the bench's own writes
@@ -316,8 +273,7 @@ object Bench {
     // WRITER ~0; measured self io-PSI on a quiet box: 0.00-0.02 on
     // every query including the parquet/Derby/gRPC landers), and far
     // below what a disk-hammering co-tenant induces.
-    val psiGate = sys.env.get("SPARK_GRAFT_PSI_RETRY").map(_.toDouble)
-      .getOrElse(0.10)
+    val psiGate = 0.10
     // The cpu-PSI retry gate (VERDICT r15 #1). Unlike io/mem, the bench
     // is NOT self-quiet on this axis — a 32-thread Spark stage on 32
     // cores queues runnable tasks by design during wide shuffles.
@@ -325,35 +281,25 @@ object Bench {
     // (q110/q111/q159/q166): 0.002-0.037 — so 0.25 carries ~7x headroom
     // over self while a CPU-hogging co-tenant (a competing 32-thread
     // job) drives the fraction toward 1.0.
-    val cpuGate = sys.env.get("SPARK_GRAFT_CPU_RETRY").map(_.toDouble)
-      .getOrElse(0.25)
+    val cpuGate = 0.25
     // Stolen cores over the window: hypervisor-side contention neither
     // ext-jiffies nor any PSI axis charges. This box's QUIET hum reads
     // 0.01-0.21 stolen cores across kept windows (hypervisor jitter,
     // not co-tenancy), and sub-0.5 stolen cores on 32 inflate wall
     // <2% — far below any slot inflation worth a retry. 0.5 clears the
     // hum; a real noisy-neighbor episode reads whole cores.
-    val stealGate = sys.env.get("SPARK_GRAFT_STEAL_RETRY").map(_.toDouble)
-      .getOrElse(0.50)
+    val stealGate = 0.50
     // GC fraction of the window: the between-queries System.gc() keeps
     // timed windows near 0; a major collection landing INSIDE a window
     // (provoked by the previous query's garbage) reads 0.2-0.8 and the
     // retry re-measures with a clean heap.
-    val gcGate = sys.env.get("SPARK_GRAFT_GC_RETRY").map(_.toDouble)
-      .getOrElse(0.15)
+    val gcGate = 0.15
     def taintedStats(st: RunStats): Boolean =
-      (retryGate > 0 && st.ext >= retryGate) ||
-        (psiGate > 0 && (st.io >= psiGate || st.mem >= psiGate)) ||
-        (cpuGate > 0 && st.cpu >= cpuGate) ||
-        (stealGate > 0 && st.steal >= stealGate) ||
-        (gcGate > 0 && st.gc >= gcGate)
+      st.ext >= retryGate || st.io >= psiGate || st.mem >= psiGate ||
+        st.cpu >= cpuGate || st.steal >= stealGate || st.gc >= gcGate
     val failedSet = failed.toSet
     var pass = 1
-    // any enabled gate arms the loop — a window taintedStats flags must
-    // get its retry even when the ext/psi gates are disabled by env
-    val anyGate = retryGate > 0 || psiGate > 0 || cpuGate > 0 ||
-      stealGate > 0 || gcGate > 0
-    while (anyGate && pass <= 2 &&
+    while (pass <= 2 &&
         keep.exists { case (n, st) => taintedStats(st) && !failedSet(n) }) {
       val tainted = registry.filter(q =>
         !failedSet(q.name) && taintedStats(keep(q.name)))
@@ -401,27 +347,25 @@ object Bench {
     }
     val extSelf = scala.collection.mutable.LinkedHashMap[String, Double]()
     var selfHum = -1.0
-    if (retryGate > 0) {
-      val overGate = registry.filter(q =>
-        !failedSet(q.name) && keep(q.name).ext >= retryGate)
-      overGate.foreach { q =>
-        val hum = idleHum(2500)
-        val st = runOne(q, recordFailure = false)
-        if (st.ok) {
-          val s0 = keep(q.name)
-          keep(q.name) = RunStats(math.min(s0.sec, st.sec),
-            quietest(s0.ext, st.ext), quietest(s0.io, st.io),
-            quietest(s0.mem, st.mem), quietest(s0.cpu, st.cpu),
-            quietest(s0.steal, st.steal), quietest(s0.gc, st.gc),
-            ok = true)
-        }
-        val kept = keep(q.name).ext
-        System.err.println(f"[bench] ext_self check ${q.name}: idle hum " +
-          f"$hum%.3f cores, re-run ext ${st.ext}%.2f, kept $kept%.2f")
-        if (hum >= 0 && hum < 0.06 && kept >= retryGate) {
-          extSelf(q.name) = kept
-          selfHum = math.max(selfHum, hum)
-        }
+    val overGate = registry.filter(q =>
+      !failedSet(q.name) && keep(q.name).ext >= retryGate)
+    overGate.foreach { q =>
+      val hum = idleHum(2500)
+      val st = runOne(q, recordFailure = false)
+      if (st.ok) {
+        val s0 = keep(q.name)
+        keep(q.name) = RunStats(math.min(s0.sec, st.sec),
+          quietest(s0.ext, st.ext), quietest(s0.io, st.io),
+          quietest(s0.mem, st.mem), quietest(s0.cpu, st.cpu),
+          quietest(s0.steal, st.steal), quietest(s0.gc, st.gc),
+          ok = true)
+      }
+      val kept = keep(q.name).ext
+      System.err.println(f"[bench] ext_self check ${q.name}: idle hum " +
+        f"$hum%.3f cores, re-run ext ${st.ext}%.2f, kept $kept%.2f")
+      if (hum >= 0 && hum < 0.06 && kept >= retryGate) {
+        extSelf(q.name) = kept
+        selfHum = math.max(selfHum, hum)
       }
     }
     // Per-query self-baseline adjudication (VERDICT r16 #1, the top
@@ -439,8 +383,7 @@ object Bench {
     // tail adjudicates itself even when the contention channel is
     // unknown to every witness. The stamp is evidence, not a gate:
     // kept numbers are never replaced by baseline numbers.
-    val bandGate = sys.env.get("SPARK_GRAFT_BAND_RETRY").map(_.toDouble)
-      .getOrElse(2.0)
+    val bandGate = 2.0
     val baselinePath = BenchBaseline.resolvePath(sfDir)
     val boxCpuCount = Runtime.getRuntime.availableProcessors
     val baseline = BenchBaseline.loadForBox(baselinePath, boxCpuCount,
@@ -454,7 +397,7 @@ object Bench {
         .map(b => BenchBaseline.ratio(st.sec, b))
     }
     val overBand = scala.collection.mutable.LinkedHashMap[String, Double]()
-    if (bandGate > 0 && baseline.nonEmpty) {
+    if (baseline.nonEmpty) {
       System.err.println(s"[bench] self-baseline: ${baseline.size} " +
         s"entries from $baselinePath (band gate ${bandGate}x)")
       val over0 = registry.map(_.name).filter(n => overBandNow(n).isDefined)
@@ -485,7 +428,7 @@ object Bench {
             f"${baseline(qPrefix(n))}%.3f s")
         }
       }
-    } else if (bandGate > 0)
+    } else
       System.err.println(s"[bench] no self-baseline at $baselinePath — " +
         "over_band adjudication inactive (write one on a quiet box with " +
         "SPARK_GRAFT_BASELINE_WRITE=1)")
@@ -497,8 +440,7 @@ object Bench {
     // Computed here, before the baseline write, because the band also
     // gates that write (below).
     val heapGb = Runtime.getRuntime.maxMemory / (1024.0 * 1024 * 1024)
-    val heapBandGb = sys.env.get("SPARK_GRAFT_HEAP_BAND_GB").map(_.toDouble)
-      .getOrElse(16.0)
+    val heapBandGb = 16.0
     val heapOk = BenchBaseline.heapInBand(heapGb, heapBandGb)
     if (!heapOk)
       System.err.println(f"[bench] WARNING: JVM heap $heapGb%.1f g is " +
@@ -532,10 +474,8 @@ object Bench {
       // landing slots unadjudicated by over_band.
       def selfOnlyExt(n: String, st: RunStats): Boolean =
         extSelf.contains(n) &&
-          !((psiGate > 0 && (st.io >= psiGate || st.mem >= psiGate)) ||
-            (cpuGate > 0 && st.cpu >= cpuGate) ||
-            (stealGate > 0 && st.steal >= stealGate) ||
-            (gcGate > 0 && st.gc >= gcGate))
+          !(st.io >= psiGate || st.mem >= psiGate || st.cpu >= cpuGate ||
+            st.steal >= stealGate || st.gc >= gcGate)
       val quiet = keep.toSeq.collect {
         case (n, st) if st.ok && !failedSet(n) &&
             (!taintedStats(st) || selfOnlyExt(n, st)) =>
@@ -907,10 +847,7 @@ object Bench {
             // the raw run must not route the landed run through a
             // fragment computed from sfDir. Cleanup sits outside the
             // timed window.
-            graft.pipeline.Similarity.releaseResult()
-            spark.sparkContext.getPersistentRDDs.values
-              .foreach(_.unpersist(blocking = false))
-            spark.catalog.clearCache()
+            SparkEntry.release(spark)
             sec
           }
           val body = Seq("q01_pricing_summary", "q03_join_revenue_per_nation",
@@ -956,11 +893,8 @@ object Bench {
     // capture this is empty — every kept window has a sub-gate
     // witness; the full vector is always on stderr. Capped at 4 so a
     // fully-tainted capture cannot push the record down a ladder rung.
-    // gate <= 0 means the axis is DISABLED (env override) — without
-    // the guard every valid reading >= 0.0 matches and the vector
-    // stamps 4 arbitrary quiet queries as tainted (ADVICE r16)
     val extTop = keep.toSeq
-      .filter { case (_, st) => retryGate > 0 && st.ext >= retryGate }
+      .filter { case (_, st) => st.ext >= retryGate }
       .sortBy { case (_, st) => -st.ext }.take(4)
     val extTopJson =
       if (extTop.isEmpty) ""
@@ -996,8 +930,7 @@ object Bench {
     // psi_top: queries whose QUIETEST io/mem-stall witness stayed over
     // the psi gate — the non-CPU analog of ext_top (VERDICT r14 #1)
     val psiTop = keep.toSeq
-      .filter { case (_, st) =>
-        psiGate > 0 && (st.io >= psiGate || st.mem >= psiGate) }
+      .filter { case (_, st) => st.io >= psiGate || st.mem >= psiGate }
       .sortBy { case (_, st) => -math.max(st.io, st.mem) }.take(4)
     val psiTopJson =
       if (psiTop.isEmpty) ""
@@ -1010,10 +943,8 @@ object Bench {
     // explanation vectors for the r16 witnesses (VERDICT r15 #1).
     // Empty on a quiet capture; capped at 4 like ext_top/psi_top.
     def topJson(key: String, f: RunStats => Double, gate: Double): String = {
-      val top =
-        if (gate <= 0) Nil // disabled axis: same guard as extTop/psiTop
-        else keep.toSeq.filter { case (_, st) => f(st) >= gate }
-          .sortBy { case (_, st) => -f(st) }.take(4)
+      val top = keep.toSeq.filter { case (_, st) => f(st) >= gate }
+        .sortBy { case (_, st) => -f(st) }.take(4)
       if (top.isEmpty) ""
       else s""","$key":{${top.map { case (n, st) =>
         "\"" + n.takeWhile(_ != '_').stripPrefix("q") + "\":" + f2(f(st))
@@ -1094,8 +1025,7 @@ object Bench {
     try {
       val scPath = sys.env.getOrElse("SPARK_GRAFT_QUERIES_JSON",
         "BENCH_queries.json")
-      val cpusN = scala.util.Try(cpus.trim.toInt).getOrElse(-1)
-      val sc = BenchRecord.sidecar(results, fs, total, cpusN,
+      val sc = BenchRecord.sidecar(results, fs, total, cpus,
         fixedJson, extrasJson, witnessJson, tailJson)
       java.nio.file.Files.write(java.nio.file.Paths.get(scPath),
         (sc + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-loop plan inspector: print each named query's executed-plan
   * shape summary (exchange count, whole-stage-codegen span count) and
   * optionally the formatted plan — the `.explain` loop the build
@@ -29,14 +27,8 @@ object ExplainQ {
       case _ => parsing = false
     }
     val names = rest.toSet
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHED_AQE", "false"))
-      .getOrCreate()
+    // a fixed local[4], so the census does not depend on the box
+    val spark = SparkEntry.localSession(4)
     spark.sparkContext.setLogLevel("ERROR")
     val qs = SparkEntry.registry.filter(q => names.isEmpty || names(q.name))
     val census = scala.collection.mutable.LinkedHashMap[String, String]()
@@ -94,16 +86,10 @@ object ExplainQ {
         println(s"${q.name} ERR ${e.getMessage}")
         census(q.name) = s"""{"err":true}"""
       }
-      // Census hygiene (the Bench lesson): a .cache() left registered
-      // by one query (or a store build) makes a LATER query whose plan
-      // contains a matching fragment compile to InMemoryTableScan —
-      // its censused exchange/codegen counts then describe the cached
-      // composite, not the query's own plan. Each query must be
-      // censused against a clean catalog.
-      graft.pipeline.Similarity.releaseResult()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
+      // Census hygiene: a cache left registered by one query (or a
+      // store build) would make a LATER query's census describe the
+      // cached composite, not its own plan.
+      SparkEntry.release(spark)
     }
     jsonOut.foreach { path =>
       val body = census.map { case (n, j) => s"""  "$n": $j""" }

@@ -31,16 +31,7 @@ object Stress {
       .getOrElse(Set("dedup", "prep", "sim", "forensics", "r11", "edit",
         "spans", "labelfold-skew", "ledgerfold", "ledgerfold-length",
         "behav", "series", "stats", "audit", "sketch"))
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHED_AQE", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(SparkEntry.envCpus, "30s")
     import graft.pipeline.{Dedup, TextOps}
 
     var corpusBlockIds = Set.empty[Int]

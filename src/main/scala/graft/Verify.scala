@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,32 +9,9 @@ object Verify {
       sys.exit(2)
     }
     val Seq(sfDir, outDir) = args.toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same end-of-run hygiene as Bench: without a GC the cleaner
-      // never reclaims broadcasts/shuffles across ~60 queries and the
-      // tail of the run crawls
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHED_AQE", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(SparkEntry.envCpus, "30s")
     new java.io.File(outDir).mkdirs()
-    // Dev-loop restriction (the driver never sets it): dump only the
-    // named queries. The recall block below still needs q23+q30+q38
-    // in the same run, so it is skipped under a restriction that
-    // omits any of them.
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach(_.diff(SparkEntry.queries.keySet).foreach(n =>
-      System.err.println(s"[verify] unknown query in VERIFY_ONLY: $n")))
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    SparkEntry.queries.foreach { case (name, fn) =>
       // remove any prior run's artifact FIRST: a query that fails must
       // leave nothing behind, or a stale result from an earlier run
       // would silently pass the driver's compare
@@ -46,11 +22,8 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // written = consumed: drop the near-dup/similarity result cache
-      // and stray persisted RDDs so no query's blocks outlive its dump
-      graft.pipeline.Similarity.releaseResult()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      // written = consumed: no query's blocks outlive its dump
+      SparkEntry.release(spark)
     }
     // ANN recall, recorded IN the correctness dump (VERDICT r4 #7).
     // q30 (LSH) and q38 (IVF) are now ALSO fully oracle-checked (the
@@ -60,8 +33,7 @@ object Verify {
     // agree on the approximate answer, recall@k vs q23's exact dump
     // from THIS run proves the approximation is any good.
     // Floors match PipelineSpec (LSH >= 0.45, IVF >= 0.30).
-    val annTrio = Set("q23_cosine_topk", "q30_ann_topk", "q38_ivf_topk")
-    if (only.forall(annTrio.subsetOf(_))) try {
+    try {
       def pairs(name: String): Set[(Long, Long)] =
         spark.read.parquet(s"$outDir/$name")
           .select("query_id", "neighbor_id").collect()

@@ -423,8 +423,7 @@ object Dedup extends Serializable {
     * 100 TB, where the corpus-sized dictionary would kill the driver).
     */
   private[graft] def maxDictEntries: Long =
-    sys.props.get("graft.dict.max.entries")
-      .orElse(sys.env.get("SPARK_GRAFT_DICT_MAX_ENTRIES")).map(_.toLong)
+    sys.props.get("graft.dict.max.entries").map(_.toLong)
       .getOrElse(8000000L)
 
   /** Each document's token hashes in the global rarest-first order
@@ -719,7 +718,7 @@ object Dedup extends Serializable {
     // The final labels are a narrow select over the last round's
     // checkpoint (already materialized by its fixpoint count), so
     // edges can release immediately and the result needs no persist +
-    // count of its own — the old materializeAndRelease here cost one
+    // count of its own — an eager persist + count here would cost one
     // full labels pass per CC call at any scale.
     labels.select(col("node"), col("lab").as("canon"))
     }

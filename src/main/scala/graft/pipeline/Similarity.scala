@@ -249,63 +249,51 @@ object Similarity extends Serializable {
     bucket
   }
 
-  /** Eagerly materialize `result` (disk-backed) and release the
-    * intermediate caches: without this, every near-dup/similarity
-    * query would pin its self-join inputs in the block manager for
-    * the rest of the session (Verify/Bench run ~44 queries in one).
+  /** Result caches of the near-dup/similarity operators, held until
+    * [[releaseResult]]: without the drain, every such query would pin
+    * its self-join inputs in the block manager for the rest of the
+    * session (Verify/Bench run ~200 queries in one).
     *
-    * Result caches live until [[releaseResult]] — a PER-THREAD list,
-    * not the old single rotating slot: a COMPOSED query (q110 =
-    * stored CC → pair probe → fold; each step a materializeAndRelease
-    * caller) must keep every step's result cached until the query
-    * completes, or step N+1's materialization silently drops step N's
-    * cache and later references recompute the whole upstream chain
-    * (the single-slot form cost q110 a full history-CC replay —
-    * measured 21.8 s vs 9.5 s). Thread-scoped because drains are
-    * thread-scoped: a streaming epoch's end-of-batch drain must not
-    * unpersist a batch query composing mid-flight on another thread
-    * of the same session. Operators build and consume their plans on
-    * the calling thread (the main loop in Bench/Verify/Stress, the
-    * stream-execution thread in foreachBatch sinks), and every drain
-    * site is the same thread that ran the operators, so per-thread
-    * scoping is exact. The list is bounded by the number of composed
-    * operator calls per query (≤ 4 across the surface).
+    * A PER-THREAD list, not a single rotating slot: a COMPOSED query
+    * (q110 = stored CC → pair probe → fold; each step registers its
+    * caches here) must keep every step's result cached until the query
+    * completes, or step N+1 silently drops step N's cache and later
+    * references recompute the whole upstream chain (the single-slot
+    * form cost q110 a full history-CC replay — measured 21.8 s vs
+    * 9.5 s). Thread-scoped because drains are thread-scoped: a
+    * streaming epoch's end-of-batch drain must not unpersist a batch
+    * query composing mid-flight on another thread of the same
+    * session. Operators build and consume their plans on the calling
+    * thread (the main loop in Bench/Verify/Stress, the stream-execution
+    * thread in foreachBatch sinks), and every drain site is the same
+    * thread that ran the operators, so per-thread scoping is exact.
     */
   private val liveResults =
     ThreadLocal.withInitial[java.util.ArrayDeque[DataFrame]](() =>
       new java.util.ArrayDeque[DataFrame]())
 
-  private[graft] def materializeAndRelease(result: DataFrame,
-      intermediates: Seq[DataFrame]): DataFrame = {
-    val out = result.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    intermediates.foreach(_.unpersist(blocking = false))
-    liveResults.get().add(out)
-    out
-  }
-
   /** Register an already-persisted (possibly lazily) DataFrame for the
     * end-of-query [[releaseResult]] drain WITHOUT forcing a
     * materialization pass — for intermediates whose first consumer
-    * materializes them anyway (the count in [[materializeAndRelease]]
-    * is a full extra pass at any scale when the caller's next action
-    * reads the frame regardless).
+    * materializes them anyway (an eager count here would be a full
+    * extra pass at any scale when the caller's next action reads the
+    * frame regardless).
     */
   private[graft] def registerForRelease(df: DataFrame): DataFrame = {
     liveResults.get().add(df)
     df
   }
 
-  /** The LAZY sibling of [[materializeAndRelease]]: cache the result,
-    * KEEP the intermediates cached (registered for the end-of-query
-    * drain instead of unpersisted now), and skip the forced count —
-    * the caller's next action materializes result + intermediates in
-    * the job it runs anyway, saving one full result pass per operator
-    * call at any scale. Use only where nothing between here and the
-    * consumer's action depends on synchronous materialization (e.g.
-    * a scan that must run inside a widened parquet-pushdown conf
-    * window is pinned by its own eager persist first —
-    * GramIndexLayout.probe does exactly that for its index read).
+  /** Cache the result and register it, together with its (still
+    * cached) intermediates, for the end-of-query drain, without a
+    * forced count — the caller's next action materializes result +
+    * intermediates in the job it runs anyway, saving one full result
+    * pass per operator call at any scale. Use only where nothing
+    * between here and the consumer's action depends on synchronous
+    * materialization (e.g. a scan that must run inside a widened
+    * parquet-pushdown conf window is pinned by its own eager persist
+    * first — GramIndexLayout.probe does exactly that for its index
+    * read).
     */
   private[graft] def cacheAndRelease(result: DataFrame,
       intermediates: Seq[DataFrame]): DataFrame = {
@@ -316,9 +304,9 @@ object Similarity extends Serializable {
     out
   }
 
-  /** Drop every result cache [[materializeAndRelease]] recorded on
-    * THIS thread — the consumed DataFrames stay valid (they just
-    * recompute if re-read). Call from the thread that ran the
+  /** Drop every cache [[registerForRelease]] and [[cacheAndRelease]]
+    * recorded on THIS thread — the consumed DataFrames stay valid (they
+    * just recompute if re-read). Call from the thread that ran the
     * operators.
     */
   def releaseResult(): Unit = {

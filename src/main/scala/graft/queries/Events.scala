@@ -1720,7 +1720,10 @@ object Events {
 
   /** The q133 selection over any frame with event_type/ts/ts_ns/
     * event_id/value — shared with Stress so the measured curve is the
-    * shipped plan.
+    * shipped plan. The kernel requires non-null ts, value and
+    * event_id: each row binds to a tuple of primitive Longs, so a null
+    * fails the query (NOT_NULL_ASSERT_VIOLATION) instead of yielding a
+    * row. The events tables carry no such nulls.
     */
   private[graft] def lttbOf(raw: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {

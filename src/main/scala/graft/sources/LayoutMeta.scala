@@ -11,7 +11,7 @@ import java.nio.file.{Files, Paths}
   * 5.1-5.4 s at 8; read 0.46 vs 0.20 s; write 1.24 vs 0.33 s), while
   * at 100 TB a fixed 64 under-prunes (each directory holds 1/64 of
   * the corpus). The count is now DERIVED from the measured row count
-  * at build time (docs-per-bucket target, env-tunable, capped so the
+  * at build time (docs-per-bucket target, capped so the
   * probe-side bounded collect stays bounded) and RECORDED in a
   * `_nbuckets` sidecar; probes/folds/appends read the sidecar so the
   * pmod pruning always matches the layout that was actually built
@@ -21,14 +21,12 @@ import java.nio.file.{Files, Paths}
 object LayoutMeta {
 
   /** Target rows (docs/labels) per bucket directory. */
-  def rowsPerBucket: Long = sys.env.get("SPARK_GRAFT_STORE_ROWS_PER_BUCKET")
-    .map(_.toLong).getOrElse(500L)
+  val rowsPerBucket: Long = 500L
 
   /** Cap: keeps every probe's bucket-set collect (≤ nBuckets ints)
     * bounded driver state at any corpus size.
     */
-  def maxBuckets: Int = sys.env.get("SPARK_GRAFT_STORE_MAX_BUCKETS")
-    .map(_.toInt).getOrElse(4096)
+  val maxBuckets: Int = 4096
 
   /** Derived bucket count for a layout built over `rows` keys. */
   def nBucketsFor(rows: Long): Int =
