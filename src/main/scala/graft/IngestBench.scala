@@ -56,10 +56,7 @@ object IngestBench {
     } finally {
       frames.unpersist(blocking = false)
       // ~1M rows of parquet per run: delete, don't leak /tmp
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tmpRoot).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
+      graft.streaming.Parts.deleteTree(tmpRoot)
     }
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.net.{GrpcIngestClient, GrpcIngestServer, IngestClient, IngestEngine, IngestServer, Metrics}
+import graft.net.{GrpcIngestClient, GrpcIngestServer, IngestClient, IngestEngine, IngestServer, IngestSession, Metrics}
 import graft.proto.ProtoRows
 import graft.queries.TranscodeE2E
 import graft.sources.QueueSource
@@ -40,15 +40,6 @@ object WireBench {
     }
   }
 
-  /** The two clients expose identical session surfaces (both are
-    * shells over `ClientCore`) but share no interface — this is it.
-    */
-  private trait WireClient {
-    def registerType(t: String): Int
-    def writeBatch(t: String, bodies: Seq[Array[Byte]], retryTimes: Int): Int
-    def close(): Unit
-  }
-
   /** Returns (rows admitted, wall seconds). Capacity is sized so the
     * fill never crosses the server's backoff high-water mark — this
     * measures the acceptance path's speed; the flow-control path
@@ -67,7 +58,7 @@ object WireBench {
       if (transport.startsWith("grpc"))
         Some(new GrpcIngestServer(srv.engine, 0, new Metrics).start())
       else None
-    def connect(): WireClient = grpcSrv match {
+    def connect(): IngestSession = grpcSrv match {
       case Some(g) if transport == "grpc_unary" =>
         // the reference's unary WriteBatch RPC: ONE long-lived h2c
         // connection, a fresh HTTP/2 stream per call (the gRPC channel
@@ -75,7 +66,7 @@ object WireBench {
         // headers/trailers, against the same engine and queue
         val (group, conn) =
           net.GrpcIngestClient.openChannel("127.0.0.1", g.boundPort)
-        new WireClient {
+        new IngestSession {
           def registerType(t: String) = 0 // unary names the type per payload
           def writeBatch(t: String, b: Seq[Array[Byte]], r: Int) = {
             val (status, _) = net.GrpcIngestClient.unaryWriteBatchOn(
@@ -92,22 +83,8 @@ object WireBench {
             ()
           }
         }
-      case Some(g) =>
-        val c = new GrpcIngestClient("127.0.0.1", g.boundPort)
-        new WireClient {
-          def registerType(t: String) = c.registerType(t)
-          def writeBatch(t: String, b: Seq[Array[Byte]], r: Int) =
-            c.writeBatch(t, b, r)
-          def close() = c.close()
-        }
-      case None =>
-        val c = new IngestClient("127.0.0.1", srv.boundPort)
-        new WireClient {
-          def registerType(t: String) = c.registerType(t)
-          def writeBatch(t: String, b: Seq[Array[Byte]], r: Int) =
-            c.writeBatch(t, b, r)
-          def close() = c.close()
-        }
+      case Some(g) => new GrpcIngestClient("127.0.0.1", g.boundPort)
+      case None => new IngestClient("127.0.0.1", srv.boundPort)
     }
     try {
       val bodies = (0 until batch).map(i => ProtoRows.encodeValues(

@@ -7,6 +7,13 @@ import graft.streaming.RowBuffer
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+/** The session surface both transports' clients share. */
+trait IngestSession {
+  def registerType(msgType: String): Int
+  def writeBatch(msgType: String, bodies: Seq[Array[Byte]], retryTimes: Int = 3): Int
+  def close(): Unit
+}
+
 /** Transport-agnostic client half of the streaming ingest session
   * (reference `client/client.go:49-210`): per-batch ack bookkeeping,
   * the message-type → session-id dictionary, the monotonic backoff

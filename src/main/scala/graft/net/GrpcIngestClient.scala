@@ -28,7 +28,7 @@ import scala.util.control.NonFatal
 final class GrpcIngestClient(host: String, port: Int,
     retrySleepMs: Long = 20, ackTimeoutMs: Long = 10000,
     tlsTrust: Option[java.nio.file.Path] = None,
-    gzip: Boolean = false) {
+    gzip: Boolean = false) extends IngestSession {
 
   import GrpcIngestClient._
 
@@ -73,7 +73,7 @@ final class GrpcIngestClient(host: String, port: Int,
   def backoffDeadline: Long = core.backoffDeadline
   def registerType(msgType: String): Int = core.registerType(msgType)
   def writeBatch(msgType: String, bodies: Seq[Array[Byte]],
-      retryTimes: Int = 3): Int = core.writeBatch(msgType, bodies, retryTimes)
+      retryTimes: Int): Int = core.writeBatch(msgType, bodies, retryTimes)
   def sink: (String, Seq[Array[Byte]]) => RowBuffer.WriteResult = core.sink
 
   /** Half-close the request side and wait briefly for the server's

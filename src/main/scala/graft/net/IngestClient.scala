@@ -20,7 +20,7 @@ import scala.util.control.NonFatal
   * runs unchanged over the network instead of in-process.
   */
 final class IngestClient(host: String, port: Int,
-    retrySleepMs: Long = 20, ackTimeoutMs: Long = 10000) {
+    retrySleepMs: Long = 20, ackTimeoutMs: Long = 10000) extends IngestSession {
 
   private val sock = new Socket(host, port)
   sock.setTcpNoDelay(true)
@@ -59,7 +59,7 @@ final class IngestClient(host: String, port: Int,
     * deadlines are honored before EVERY attempt.
     */
   def writeBatch(msgType: String, bodies: Seq[Array[Byte]],
-      retryTimes: Int = 3): Int = core.writeBatch(msgType, bodies, retryTimes)
+      retryTimes: Int): Int = core.writeBatch(msgType, bodies, retryTimes)
 
   /** Adapter for [[graft.streaming.Batcher]]'s sink signature: one
     * delivery attempt per call (the Batcher owns retry/backoff).

@@ -1,14 +1,11 @@
 package graft.net
 
-import graft.proto.ProtoRows
 import graft.sources.QueueSource
-import graft.streaming.LandingIngest
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
-import org.apache.spark.sql.functions.col
+import graft.streaming.{LandingIngest, Parts, QueueIngest}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.Comparator
 import java.util.concurrent.CountDownLatch
 import scala.util.control.NonFatal
 
@@ -57,9 +54,14 @@ object ServerMain {
     ()
   }
 
-  /** Start one landing stream per drain plan. Returns the running
-    * queries keyed by queue name (exposed for [[restartDrains]] and
-    * tests).
+  /** Start one landing stream per drain plan. Each micro-batch reads
+    * the queue as one slice per configured writer and runs as a single
+    * stage of at most `writers` tasks: decode, transcode and land,
+    * either as the batch's parquet partition or, for a `jdbc_url`
+    * table, as one INSERT transaction per writer (the reference's
+    * per-writer batched INSERT, clickhouse_table_writer.go:115-149).
+    * Returns the running queries keyed by queue name (exposed for
+    * [[restartDrains]] and tests).
     */
   def startDrains(spark: SparkSession,
       server: BristleServer): Map[String, StreamingQuery] =
@@ -67,10 +69,8 @@ object ServerMain {
       val landing = Paths.get(d.table.landingDir.get)
       val ckpt = landing.resolve(".ckpt").toString
       val out = landing.resolve("data").resolve(s"e=${epochOf(landing)}").toString
-      val bodies = QueueSource.readStream(spark, d.queueName)
-        .select(col("value")).as[Array[Byte]](Encoders.BINARY)
-      val q = d.binding.transcode(ProtoRows.decode(bodies, d.message))
-        .writeStream
+      val q = QueueIngest.transcoded(spark, d.queueName, d.table.writers,
+          d.message, d.binding).writeStream
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.ProcessingTime(d.table.flushIntervalMs.toLong))
         .foreachBatch { (df: DataFrame, batchId: Long) =>
@@ -86,11 +86,6 @@ object ServerMain {
       d.queueName -> q
     }.toMap
 
-  private def deleteRecursive(p: Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).sorted(Comparator.reverseOrder[Path]())
-        .forEach(f => { Files.delete(f); () })
-
   /** The drain half of the reload swap. Call with the old drains
     * ALREADY stopped (the HUP handler stops them before applying the
     * new config, so a drain never runs against a queue object that was
@@ -104,7 +99,7 @@ object ServerMain {
         .exists(oldQ => !(oldQ eq server.queues(d.queueName)))
       if (rebuilt) {
         val landing = Paths.get(d.table.landingDir.get)
-        deleteRecursive(landing.resolve(".ckpt"))
+        Parts.deleteTree(landing.resolve(".ckpt"))
         bumpEpoch(landing)
       }
     }

@@ -238,122 +238,83 @@ object TranscodeE2E {
     },
     q25.oracle)
 
-  /** S1/S2 over the REAL network: a [[graft.net.BristleServer]] is
+  /** Lands every fixture batch through a [[graft.net.BristleServer]]
     * assembled from a config file + descriptor set (the reference's
-    * startup path, server.go + config.json), an [[graft.net
-    * .IngestClient]] registers the message type for a session id and
-    * streams every fixture batch over a TCP socket with per-batch
-    * acks, and the landed queue drains through the MicroBatchStream →
-    * transcode → idempotent-sink pipeline. Oracle identical to q25 —
-    * the wire hop must be invisible in the landed values.
+    * startup path, server.go + config.json): a client registers the
+    * message type for a session id and streams every batch with
+    * per-batch acks, then the landed queue drains through the
+    * MicroBatchStream → transcode → idempotent-sink pipeline. `grpc`
+    * picks real gRPC over HTTP/2 (the `grpc_port` endpoint) instead of
+    * the socket protocol.
     */
-  val q64 = Q(
-    "q64_wire_ingest",
-    (spark, _) => {
-      import graft.net.{BristleServer, IngestClient}
-      import graft.streaming.QueueIngest
-      val base = Files.createTempDirectory("graft-wire-ingest-")
-      // descriptor set on disk, as the reference deploys schemas
-      val in = getClass.getResourceAsStream("/descriptors/example.pb")
-      Files.write(base.resolve("example.desc"), in.readAllBytes())
-      in.close()
-      val colsJson = table.map { c =>
-        val d = if (c.default.isEmpty) ""
-          else s""", "default": "${c.default.replace("\"", "\\\"")}""""
-        s"""{"name": "${c.name}", "type": "${c.typeString}"$d}"""
-      }.mkString("[", ", ", "]")
-      Files.write(base.resolve("config.json"),
-        s"""{
-           |  "ingest": {"bind_port": 0, "max_in_flight": 12},
-           |  "proto_descriptor_paths": ["${base.resolve("example.desc")}"],
-           |  "catalogs": [{
-           |    "name": "landing",
-           |    "tables": {"example": {
-           |      "capacity": $NumRows,
-           |      "on_full": "block",
-           |      "messages": ["ExampleMessage"],
-           |      "columns": $colsJson
-           |    }}}]
-           |}""".stripMargin.getBytes("UTF-8"))
-      val server = new BristleServer(base.resolve("config.json")).start()
+  private def wireIngest(spark: org.apache.spark.sql.SparkSession,
+      grpc: Boolean): org.apache.spark.sql.DataFrame = {
+    import graft.net.{BristleServer, GrpcIngestClient, IngestClient, IngestSession}
+    import graft.streaming.QueueIngest
+    val base = Files.createTempDirectory("graft-wire-ingest-")
+    // descriptor set on disk, as the reference deploys schemas
+    val in = getClass.getResourceAsStream("/descriptors/example.pb")
+    Files.write(base.resolve("example.desc"), in.readAllBytes())
+    in.close()
+    val colsJson = table.map { c =>
+      val d = if (c.default.isEmpty) ""
+        else s""", "default": "${c.default.replace("\"", "\\\"")}""""
+      s"""{"name": "${c.name}", "type": "${c.typeString}"$d}"""
+    }.mkString("[", ", ", "]")
+    val grpcPort = if (grpc) """, "grpc_port": 0""" else ""
+    Files.write(base.resolve("config.json"),
+      s"""{
+         |  "ingest": {"bind_port": 0$grpcPort, "max_in_flight": 12},
+         |  "proto_descriptor_paths": ["${base.resolve("example.desc")}"],
+         |  "catalogs": [{
+         |    "name": "landing",
+         |    "tables": {"example": {
+         |      "capacity": $NumRows,
+         |      "on_full": "block",
+         |      "messages": ["ExampleMessage"],
+         |      "columns": $colsJson
+         |    }}}]
+         |}""".stripMargin.getBytes("UTF-8"))
+    val server = new BristleServer(base.resolve("config.json")).start()
+    try {
+      val client: IngestSession =
+        if (grpc) new GrpcIngestClient("127.0.0.1", server.grpc.get.boundPort)
+        else new IngestClient("127.0.0.1", server.ingest.boundPort)
       try {
-        val client = new IngestClient("127.0.0.1", server.ingest.boundPort)
-        try {
-          client.registerType("ExampleMessage")
-          fixtures.grouped(MsgsPerFrame).foreach { group =>
-            val bodies = group.map(f =>
-              ProtoRows.encodeValues(message, f.protoValues))
-            val r = client.writeBatch("ExampleMessage", bodies)
-            require(r == graft.net.ControlProto.BatchResult.Ok,
-              s"wire ingest batch rejected: $r")
-          }
-        } finally client.close()
-        val binding = SchemaBinder.bind(message, table)
-        QueueIngest.drain(spark, "landing.example", message, binding)
-          .transform(sinkSelect)
-      } finally {
-        server.stop()
-        server.queues.keys.foreach(graft.sources.QueueSource.drop)
-      }
-    },
+        client.registerType("ExampleMessage")
+        fixtures.grouped(MsgsPerFrame).foreach { group =>
+          val bodies = group.map(f =>
+            ProtoRows.encodeValues(message, f.protoValues))
+          val r = client.writeBatch("ExampleMessage", bodies)
+          require(r == graft.net.ControlProto.BatchResult.Ok,
+            s"wire ingest batch rejected: $r")
+        }
+      } finally client.close()
+      val binding = SchemaBinder.bind(message, table)
+      QueueIngest.drain(spark, "landing.example", message, binding)
+        .transform(sinkSelect)
+    } finally {
+      server.stop()
+      server.queues.keys.foreach(graft.sources.QueueSource.drop)
+    }
+  }
+
+  /** S1/S2 over the REAL network: the fixture rows sent over a TCP
+    * socket into a config-assembled server ([[wireIngest]]). Oracle
+    * identical to q25 — the wire hop must be invisible in the landed
+    * values.
+    */
+  val q64 = Q("q64_wire_ingest", (spark, _) => wireIngest(spark, grpc = false),
     q25.oracle)
 
   /** S1/S2 over the reference's ACTUAL transport: same assembly as
     * q64, but the client speaks real gRPC over HTTP/2 — netty h2c on
     * both sides, `bristle.BristleIngestService/Streaming` bidi with
     * register/identify and per-batch acks as length-prefixed gRPC
-    * frames — into the `grpc_port` endpoint served next to the socket
-    * one. Oracle identical to q25: the HTTP/2 hop must be invisible
+    * frames. Oracle identical to q25: the HTTP/2 hop must be invisible
     * in the landed values.
     */
-  val q100 = Q(
-    "q100_grpc_ingest",
-    (spark, _) => {
-      import graft.net.{BristleServer, GrpcIngestClient}
-      import graft.streaming.QueueIngest
-      val base = Files.createTempDirectory("graft-grpc-ingest-")
-      val in = getClass.getResourceAsStream("/descriptors/example.pb")
-      Files.write(base.resolve("example.desc"), in.readAllBytes())
-      in.close()
-      val colsJson = table.map { c =>
-        val d = if (c.default.isEmpty) ""
-          else s""", "default": "${c.default.replace("\"", "\\\"")}""""
-        s"""{"name": "${c.name}", "type": "${c.typeString}"$d}"""
-      }.mkString("[", ", ", "]")
-      Files.write(base.resolve("config.json"),
-        s"""{
-           |  "ingest": {"bind_port": 0, "grpc_port": 0, "max_in_flight": 12},
-           |  "proto_descriptor_paths": ["${base.resolve("example.desc")}"],
-           |  "catalogs": [{
-           |    "name": "landing",
-           |    "tables": {"example": {
-           |      "capacity": $NumRows,
-           |      "on_full": "block",
-           |      "messages": ["ExampleMessage"],
-           |      "columns": $colsJson
-           |    }}}]
-           |}""".stripMargin.getBytes("UTF-8"))
-      val server = new BristleServer(base.resolve("config.json")).start()
-      try {
-        val client = new GrpcIngestClient("127.0.0.1", server.grpc.get.boundPort)
-        try {
-          client.registerType("ExampleMessage")
-          fixtures.grouped(MsgsPerFrame).foreach { group =>
-            val bodies = group.map(f =>
-              ProtoRows.encodeValues(message, f.protoValues))
-            val r = client.writeBatch("ExampleMessage", bodies)
-            require(r == graft.net.ControlProto.BatchResult.Ok,
-              s"gRPC ingest batch rejected: $r")
-          }
-        } finally client.close()
-        val binding = SchemaBinder.bind(message, table)
-        QueueIngest.drain(spark, "landing.example", message, binding)
-          .transform(sinkSelect)
-      } finally {
-        server.stop()
-        server.queues.keys.foreach(graft.sources.QueueSource.drop)
-      }
-    },
+  val q100 = Q("q100_grpc_ingest", (spark, _) => wireIngest(spark, grpc = true),
     q25.oracle)
 
   val all: Seq[Q] = Seq(q25, q33, q35, q41, q48, q64, q100)

@@ -13,11 +13,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import java.util
 
 /** S1/S2 engine side as a REAL custom DataSourceV2 MicroBatchStream
-  * (SURVEY §4's "only genuinely stateful custom component"): an
-  * in-memory, admission-controlled message queue the gRPC surface
-  * would feed. The wire protocol stays out of scope (no gRPC in the
-  * zero-egress build — the landing-dir shim covers durability); what
-  * this source makes real is the engine contract:
+  * (SURVEY §4's "only genuinely stateful custom component"): the
+  * in-memory, admission-controlled message queue the socket and gRPC
+  * servers feed and every landing drain reads. What it makes real is
+  * the engine contract:
   *
   *  - bounded buffer with bristle's drop-oldest / drop-newest(tail) /
   *    block admission INSIDE the source (D1/D7 live at the source
@@ -25,9 +24,11 @@ import java.util
   *  - monotone offsets (absolute sequence numbers) with retention:
   *    load-shedding advances the readable start, commit() truncates
   *    below the committed offset;
-  *  - micro-batch planning ships each batch's rows inside the
-  *    serialized InputPartitions (the MemoryStream pattern), so
-  *    executors never reach back into driver state.
+  *  - micro-batch planning splits each batch into one contiguous slice
+  *    per writer (D3 without a shuffle: the reference rotates rows
+  *    over its N writers, clickhouse_table.go:74-77) and packs each
+  *    slice's bodies into the serialized InputPartition, so executors
+  *    never reach back into driver state.
   */
 object QueueSource {
 
@@ -66,11 +67,19 @@ object QueueSource {
       RowBuffer.Ok
     }
 
-    /** Rows in [start, end), clamped to what retention still holds. */
-    def slice(start: Long, end: Long): Seq[(Long, Array[Byte])] = synchronized {
+    /** Bodies in [start, end), clamped to what retention still holds,
+      * with the seq of the first one.
+      */
+    def bodies(start: Long, end: Long): (Long, Array[Array[Byte]]) = synchronized {
       val s = math.max(start, first)
-      val e = math.min(end, first + log.size)
-      (s until e).map(i => i -> log((i - first).toInt))
+      val e = math.max(s, math.min(end, first + log.size))
+      s -> Array.tabulate((e - s).toInt)(i => log((s - first).toInt + i))
+    }
+
+    /** Rows in [start, end) as (seq, body), clamped like [[bodies]]. */
+    def slice(start: Long, end: Long): Seq[(Long, Array[Byte])] = {
+      val (s, b) = bodies(start, end)
+      b.indices.map(i => (s + i) -> b(i))
     }
 
     /** Commit barrier: data below `upTo` is processed and released. */
@@ -105,11 +114,13 @@ object QueueSource {
 
   def drop(name: String): Unit = { queues.remove(name); () }
 
-  /** readStream entry point. */
+  /** readStream entry point: each micro-batch reads as
+    * `min(writers, rows)` partitions, one per sink writer.
+    */
   def readStream(spark: org.apache.spark.sql.SparkSession,
-      name: String): org.apache.spark.sql.DataFrame =
+      name: String, writers: Int): org.apache.spark.sql.DataFrame =
     spark.readStream.format(classOf[QueueSourceProvider].getName)
-      .option("queue", name).load()
+      .option("queue", name).option("writers", writers.toLong).load()
 }
 
 class QueueSourceProvider extends TableProvider {
@@ -117,31 +128,31 @@ class QueueSourceProvider extends TableProvider {
     QueueSource.schema
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
-    new QueueTable(properties.get("queue"))
+    new QueueTable(properties.get("queue"),
+      Option(properties.get("writers")).fold(0)(_.toInt))
 }
 
-class QueueTable(queueName: String) extends Table with SupportsRead {
+/** The queue as a table that is also its own (fixed, unpruned) scan. */
+class QueueTable(queueName: String, writers: Int) extends Table with SupportsRead
+    with ScanBuilder with Scan {
   require(queueName != null && queueName.nonEmpty, "option 'queue' is required")
+  require(writers > 0, s"option 'writers' must be a positive count, got $writers")
   override def name(): String = s"graft-queue($queueName)"
   override def schema(): StructType = QueueSource.schema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new QueueScan(queueName)
-}
-
-class QueueScan(queueName: String) extends ScanBuilder with Scan {
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = this
   override def build(): Scan = this
   override def readSchema(): StructType = QueueSource.schema
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new QueueMicroBatchStream(queueName)
+    new QueueMicroBatchStream(queueName, writers)
 }
 
 case class QueueOffset(seq: Long) extends Offset {
   override def json: String = seq.toString
 }
 
-class QueueMicroBatchStream(queueName: String) extends MicroBatchStream {
+class QueueMicroBatchStream(queueName: String, writers: Int) extends MicroBatchStream {
   private def q = QueueSource.queue(queueName)
 
   override def initialOffset(): Offset = QueueOffset(q.firstSeq)
@@ -153,14 +164,9 @@ class QueueMicroBatchStream(queueName: String) extends MicroBatchStream {
 
   override def planInputPartitions(start: Offset,
       end: Offset): Array[InputPartition] = {
-    val rows = q.slice(start.asInstanceOf[QueueOffset].seq,
+    val (first, bodies) = q.bodies(start.asInstanceOf[QueueOffset].seq,
       end.asInstanceOf[QueueOffset].seq)
-    if (rows.isEmpty) Array.empty
-    else {
-      // a few serialized slices so the batch reads in parallel
-      val per = math.max(1, (rows.size + 3) / 4)
-      rows.grouped(per).map(g => QueueInputPartition(g.toArray)).toArray
-    }
+    QueueInputPartition.split(first, bodies, writers)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -168,20 +174,50 @@ class QueueMicroBatchStream(queueName: String) extends MicroBatchStream {
   override def stop(): Unit = ()
 }
 
-/** Rows ride inside the partition (seq + bytes are Serializable), so
-  * the read side has no dependency on driver-JVM state.
+/** One contiguous slice of a micro-batch: row `i` has seq
+  * `firstSeq + i` and body `blob[offsets(i), offsets(i + 1))`. The
+  * bodies ride inside the partition as one array, so the read side has
+  * no dependency on driver-JVM state and serialization costs no
+  * per-row object.
   */
-case class QueueInputPartition(rows: Array[(Long, Array[Byte])])
-  extends InputPartition
+final case class QueueInputPartition(firstSeq: Long, offsets: Array[Int],
+    blob: Array[Byte]) extends InputPartition {
+  def size: Int = offsets.length - 1
+  def body(i: Int): Array[Byte] =
+    java.util.Arrays.copyOfRange(blob, offsets(i), offsets(i + 1))
+}
+
+object QueueInputPartition {
+
+  /** `min(parts, rows)` contiguous, gap-free slices of `bodies` (first
+    * seq `firstSeq`), sizes differing by at most one row, each packed
+    * into one blob.
+    */
+  def split(firstSeq: Long, bodies: Array[Array[Byte]],
+      parts: Int): Array[InputPartition] = {
+    val n = bodies.length
+    val k = math.min(parts, n)
+    Array.tabulate[InputPartition](k) { j =>
+      val (lo, hi) = ((n.toLong * j / k).toInt, (n.toLong * (j + 1) / k).toInt)
+      val offsets = bodies.slice(lo, hi).scanLeft(0L)(_ + _.length)
+      require(offsets.last < Int.MaxValue - 8,
+        s"micro-batch slice of ${hi - lo} rows exceeds 2 GB")
+      val blob = new Array[Byte](offsets.last.toInt)
+      for (i <- lo until hi)
+        System.arraycopy(bodies(i), 0, blob, offsets(i - lo).toInt, bodies(i).length)
+      QueueInputPartition(firstSeq + lo, offsets.map(_.toInt), blob)
+    }
+  }
+}
 
 object QueueReaderFactory extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     new PartitionReader[InternalRow] {
-      private val rows = p.asInstanceOf[QueueInputPartition].rows
+      private val part = p.asInstanceOf[QueueInputPartition]
       private var i = -1
-      override def next(): Boolean = { i += 1; i < rows.length }
+      override def next(): Boolean = { i += 1; i < part.size }
       override def get(): InternalRow =
-        new GenericInternalRow(Array[Any](rows(i)._1, rows(i)._2))
+        new GenericInternalRow(Array[Any](part.firstSeq + i, part.body(i)))
       override def close(): Unit = ()
     }
 }

@@ -295,8 +295,13 @@ object JdbcSink {
 
   /** foreachBatch-shaped Spark entry: lands `df` into `table` with
     * one connection + one tx PER PARTITION and idempotence key
-    * `"<batchId>:<partitionId>"`. Executors dial `url` directly —
-    * rows never visit the driver. Column order is the DataFrame's.
+    * `"<batchId>:<partitionId>"`. A server drain reads each
+    * micro-batch as one partition per configured writer, so this is
+    * one transaction per writer per batch (`pid < writers`), the
+    * reference's per-writer batched INSERT
+    * (clickhouse_table_writer.go:115-149). Executors dial `url`
+    * directly — rows never visit the driver. Column order is the
+    * DataFrame's.
     * Replay safety assumes attempts of one partition run serially
     * (Spark's default — speculation off); with speculation on, give
     * the table a (batch_key, row-key) primary key so the loser's

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.bind.Binding
 import graft.proto.{PMessage, ProtoRows, Wire}
+import org.apache.hadoop.fs.{Path => FsPath}
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -18,12 +19,12 @@ import java.util.concurrent.atomic.AtomicLong
   *   producer → [IngestShim: RowBuffer admission (D1) + timed flush
   *   (D4) → framed blob files]  →  Structured Streaming: binaryFile
   *   source → decodeFramed (S3+S4) → Binding.transcode (P1-P10) →
-  *   foreachBatch parquet append (D5), repartition(numWriters) (D3)
+  *   foreachBatch parquet sink (D5) with at most numWriters tasks (D3)
   *
   * The foreachBatch sink is the Spark analog of the reference's
   * transactional batched INSERT (clickhouse_table_writer.go:115-149):
-  * each micro-batch dynamically overwrites its own batchId-keyed
-  * partition, so a micro-batch replay is idempotent.
+  * each micro-batch is staged whole, then renamed into its own
+  * batchId-keyed partition, so a micro-batch replay is idempotent.
   */
 object LandingIngest {
 
@@ -179,20 +180,29 @@ object LandingIngest {
     }
   }
 
-  /** D5 sink: one micro-batch = one dynamic overwrite of its own
-    * batchId-keyed partition, with D3's round-robin writer
-    * repartition. A replay after an append-but-before-checkpoint
-    * crash overwrites its own partition instead of double-appending —
-    * actually idempotent, not by convention (ADVICE r2 #3).
+  /** D5 sink: one micro-batch = one `p_batch=<batchId>` partition,
+    * written by at most `numWriters` tasks (D3; `coalesce` is narrow,
+    * so a source that already reads one partition per writer lands in
+    * a single stage). The batch is written whole into a hidden staging
+    * dir, then one directory rename publishes it. A replay after a
+    * crash replaces the staged leftovers and any partition the crashed
+    * attempt already published, so it lands exactly once — actually
+    * idempotent, not by convention (ADVICE r2 #3). The staging name
+    * starts with `.`: Spark's file listing skips such paths, while a
+    * `_`-prefixed name containing `=` would be read as a partition.
     */
   def sinkBatch(df: DataFrame, batchId: Long, outDir: String,
-      numWriters: Int): Unit =
-    df.withColumn("p_batch", lit(batchId))
-      .repartition(numWriters)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("p_batch")
-      .parquet(outDir)
+      numWriters: Int): Unit = {
+    val out = new FsPath(outDir)
+    val fs = out.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val staging = new FsPath(out, s".staging-p_batch=$batchId")
+    val part = new FsPath(out, s"p_batch=$batchId")
+    fs.delete(staging, true)
+    df.coalesce(numWriters).write.parquet(staging.toString)
+    fs.delete(part, true)
+    if (!fs.rename(staging, part))
+      throw new java.io.IOException(s"could not rename $staging to $part")
+  }
 
   /** Consumer-side read of a landed table: the user-facing rows
     * without the sink's bookkeeping partition columns — `p_batch`
@@ -244,14 +254,16 @@ object LandingIngest {
       base.resolve("out").toString, base.resolve("ckpt").toString,
       numWriters = numWriters, availableNow = true)
     q.awaitTermination()
-    // nothing landed (everything shed/rejected) is a legitimate
-    // admission outcome — surface it as an empty frame, not a
-    // missing-path crash
-    if (!Files.exists(base.resolve("out")))
-      binding.transcode(ProtoRows.decode(
-        spark.emptyDataset(Encoders.BINARY), message))
-    else
-      // p_batch is sink bookkeeping (idempotent replay), not payload
-      spark.read.parquet(base.resolve("out").toString).drop("p_batch")
+    landedOrEmpty(spark, base.resolve("out"), message, binding)
   }
+
+  /** The landed table at `out` — or, when nothing landed (everything
+    * shed/rejected, a legitimate admission outcome), an empty frame of
+    * the binding's sink schema instead of a missing-path crash.
+    */
+  private[streaming] def landedOrEmpty(spark: SparkSession, out: Path,
+      message: PMessage, binding: Binding): DataFrame =
+    if (Files.exists(out)) readLanded(spark, out.toString)
+    else binding.transcode(ProtoRows.decode(
+      spark.emptyDataset(Encoders.BINARY), message))
 }

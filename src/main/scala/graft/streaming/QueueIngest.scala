@@ -39,20 +39,26 @@ object QueueIngest {
     }
   }
 
+  /** Queue `name` as a stream of sink rows, read as one slice per
+    * writer and decoded + transcoded inside that read stage.
+    */
+  def transcoded(spark: SparkSession, name: String, writers: Int,
+      message: PMessage, binding: Binding): DataFrame =
+    binding.transcode(ProtoRows.decode(QueueSource.readStream(spark, name, writers)
+      .select(col("value")).as[Array[Byte]](Encoders.BINARY), message))
+
   /** Drain an EXISTING queue (filled by any producer — in-process
     * writes or the [[graft.net.IngestServer]] socket path) through the
-    * MicroBatchStream → decode → transcode → idempotent-sink pipeline,
-    * returning the landed frame. Does not own the queue's lifecycle:
+    * MicroBatchStream → decode → transcode → idempotent-sink pipeline
+    * (one stage per micro-batch, one task per writer), returning the
+    * landed frame. Does not own the queue's lifecycle:
     * the caller created it and decides when to drop it.
     */
   def drain(spark: SparkSession, name: String, message: PMessage,
       binding: Binding, numWriters: Int = 2): DataFrame = {
     val base = Files.createTempDirectory("graft-queue-ingest-")
     val outDir = base.resolve("out").toString
-    val bodies = QueueSource.readStream(spark, name)
-      .select(col("value")).as[Array[Byte]](Encoders.BINARY)
-    val transcoded = binding.transcode(ProtoRows.decode(bodies, message))
-    val sq = transcoded.writeStream
+    val sq = transcoded(spark, name, numWriters, message, binding).writeStream
       .option("checkpointLocation", base.resolve("ckpt").toString)
       .foreachBatch { (df: DataFrame, batchId: Long) =>
         LandingIngest.sinkBatch(df, batchId, outDir, numWriters)
@@ -61,10 +67,6 @@ object QueueIngest {
     sq.processAllAvailable()
     sq.stop()
     sq.awaitTermination()
-    // all-shed/all-rejected runs land nothing: empty frame, not a crash
-    if (!Files.exists(base.resolve("out")))
-      binding.transcode(ProtoRows.decode(
-        spark.emptyDataset(Encoders.BINARY), message))
-    else spark.read.parquet(outDir).drop("p_batch")
+    LandingIngest.landedOrEmpty(spark, base.resolve("out"), message, binding)
   }
 }

@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions._
   *
   * Shape: each micro-batch appends ONE partial-aggregate part —
   * (keys, n, sum per value column) — under its batchId-keyed
-  * partition, reusing LandingIngest's dynamic-overwrite idempotence
-  * (a replayed batch overwrites its own part, never double-counts).
+  * partition, written by dynamic overwrite for the same batchId
+  * idempotence LandingIngest's sink has (a replayed batch overwrites
+  * its own part, never double-counts).
   * Readers merge on read: partial sums re-aggregate per key — exactly
   * ClickHouse's merge-on-read contract where unmerged parts may hold
   * several rows per key until a background merge folds them.

@@ -39,7 +39,7 @@ class QueueSourceSpec extends SparkSpec {
     val q = QueueSource.create("spec-incr", capacity = 100,
       onFull = RowBuffer.Block)
     q.writeBatch(Seq(msg(1), msg(2)))
-    val sq = QueueSource.readStream(spark, "spec-incr")
+    val sq = QueueSource.readStream(spark, "spec-incr", writers = 2)
       .writeStream.format("memory").queryName("qincr").outputMode("append")
       .start()
     try {
@@ -130,21 +130,109 @@ class QueueSourceSpec extends SparkSpec {
     assert(shed > 0 && delivered.nonEmpty)
   }
 
+  /** (seq, body) rows a reader yields from the planned partitions. */
+  private def read(parts: Seq[org.apache.spark.sql.connector.read.InputPartition]) =
+    parts.flatMap { p =>
+      val reader = QueueReaderFactory.createReader(p)
+      Iterator.continually(reader).takeWhile(_.next()).map(_.get())
+        .map(r => r.getLong(0) -> r.getBinary(1).toSeq).toSeq
+    }
+
   test("rows planned into an InputPartition survive total eviction") {
-    // The drain's other half: once slice() hands rows to the planner
-    // they ride INSIDE the serialized partition, so a task (re)read
-    // works even after the queue evicted every one of those rows —
-    // acked delivery can't be yanked back by admission.
-    val q = new QueueSource.IngestQueue(8, RowBuffer.DropOldest)
-    assert(q.writeBatch((0 until 8).map(msg)) == RowBuffer.Ok)
-    val planned = QueueInputPartition(q.slice(0, 8).toArray)
-    // evict EVERYTHING the partition references
-    assert(q.writeBatch((8 until 16).map(msg)) == RowBuffer.Ok)
-    assert(q.firstSeq == 8 && q.slice(0, 8).isEmpty)
-    val reader = QueueReaderFactory.createReader(planned)
-    val got = Iterator.continually(reader)
-      .takeWhile(_.next()).map(_.get()).map(r =>
-        r.getLong(0) -> r.getBinary(1)(0)).toSeq
-    assert(got == (0 until 8).map(i => i.toLong -> i.toByte))
+    // The drain's other half: once the planner packs rows into the
+    // partitions they ride INSIDE them, so a task (re)read works even
+    // after the queue evicted every one of those rows — acked delivery
+    // can't be yanked back by admission.
+    val q = QueueSource.create("spec-evict", 8, RowBuffer.DropOldest)
+    try {
+      assert(q.writeBatch((0 until 8).map(msg)) == RowBuffer.Ok)
+      val planned = new QueueMicroBatchStream("spec-evict", writers = 3)
+        .planInputPartitions(QueueOffset(0), QueueOffset(8)).toSeq
+      // evict EVERYTHING the partitions reference
+      assert(q.writeBatch((8 until 16).map(msg)) == RowBuffer.Ok)
+      assert(q.firstSeq == 8 && q.slice(0, 8).isEmpty)
+      // tasks get their partition through Java serialization
+      val shipped = planned.map { p =>
+        val bytes = new java.io.ByteArrayOutputStream
+        val out = new java.io.ObjectOutputStream(bytes)
+        out.writeObject(p); out.close()
+        new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(
+          bytes.toByteArray)).readObject().asInstanceOf[QueueInputPartition]
+      }
+      assert(read(shipped) == (0 until 8).map(i => i.toLong -> Seq(i.toByte)))
+    } finally QueueSource.drop("spec-evict")
+  }
+
+  test("planning gives min(writers, rows) contiguous, gap-free slices, " +
+      "zero-length bodies included") {
+    // a proto3 message with every field at its default encodes to 0
+    // bytes, so empty bodies are ordinary rows
+    def body(i: Int) = Array.fill(i % 3)(i.toByte)
+    val q = QueueSource.create("spec-plan", 64, RowBuffer.Block)
+    try {
+      assert(q.writeBatch((0 until 40).map(body)) == RowBuffer.Ok)
+      q.truncate(3) // a committed prefix: planning starts mid-log
+      for (writers <- Seq(1, 2, 3, 4, 7); (start, end) <- Seq(3L -> 4L,
+          3L -> 5L, 10L -> 17L, 3L -> 40L, 0L -> 40L, 20L -> 20L)) {
+        val parts = new QueueMicroBatchStream("spec-plan", writers)
+          .planInputPartitions(QueueOffset(start), QueueOffset(end))
+          .map(_.asInstanceOf[QueueInputPartition]).toSeq
+        val from = math.max(start, 3L)
+        val rows = (end - from).toInt
+        assert(parts.size == math.min(writers, rows), s"$writers x [$start, $end)")
+        // contiguous: each slice starts where the last ended
+        assert(parts.map(_.firstSeq) ==
+          parts.scanLeft(from)(_ + _.size).init, s"$writers x [$start, $end)")
+        assert(parts.map(_.size).sum == rows)
+        if (parts.nonEmpty)
+          assert(parts.map(_.size).max - parts.map(_.size).min <= 1)
+        assert(read(parts) ==
+          (from until end).map(i => i -> body(i.toInt).toSeq))
+      }
+    } finally QueueSource.drop("spec-plan")
+  }
+
+  test("a micro-batch lands as one stage with one task per writer") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // jobs of a running stream carry its query id as a local property
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Int]]
+    val fence = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        if (p.exists(_.getProperty("sql.streaming.queryId") != null))
+          jobs.add(e.stageInfos.map(_.numTasks))
+        if (p.exists(_.getProperty("spark.job.description") == "spec-fence"))
+          fence.countDown()
+      }
+    }
+    val binding = SchemaBinder.bind(TranscodeE2E.message, TranscodeE2E.table)
+    def land(batch: Seq[Array[Byte]], writers: Int) =
+      QueueIngest.runOnce(spark, TranscodeE2E.message, binding, Seq(batch),
+        capacity = 1000, onFull = RowBuffer.Block, numWriters = writers,
+        name = "spec-stage")
+    val bodies = TranscodeE2E.fixtures.take(10)
+      .map(f => ProtoRows.encodeValues(TranscodeE2E.message, f.protoValues))
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // 10 rows over 3 writers; 1 row over 4 writers; and one
+      // zero-length body (all fields at their proto3 defaults)
+      assert(land(bodies, 3).count() == 10)
+      val empty = land(Seq(Array.emptyByteArray), 4)
+      val zero = binding.transcode(ProtoRows.decode(
+        spark.createDataset(Seq(Array.emptyByteArray))(
+          org.apache.spark.sql.Encoders.BINARY), TranscodeE2E.message))
+      assert(empty.collect().map(_.toString).toSeq ==
+        zero.collect().map(_.toString).toSeq)
+      // the listener bus is FIFO: once it delivers a later job, it
+      // has delivered every streaming job before it
+      spark.sparkContext.setJobDescription("spec-fence")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      assert(fence.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      import scala.jdk.CollectionConverters._
+      assert(jobs.asScala.toSeq == Seq(Seq(3), Seq(1)),
+        "each micro-batch must be one job of one stage, min(writers, rows) tasks")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

@@ -181,6 +181,23 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(out).count() == 2, "replay double-appended")
     LandingIngest.sinkBatch(df, batchId = 1L, out, numWriters = 2)
     assert(spark.read.parquet(out).count() == 4, "new batch must append")
+
+    // crash replay of batch 2: the crashed attempt left a partial part
+    // file in the batch's staging dir AND (an earlier attempt) a
+    // complete p_batch=2 whose offset commit never happened
+    LandingIngest.sinkBatch(df, batchId = 2L, out, numWriters = 2)
+    val staging = java.nio.file.Paths.get(out, ".staging-p_batch=2")
+    java.nio.file.Files.createDirectories(staging)
+    java.nio.file.Files.write(staging.resolve("part-00000-crashed.snappy.parquet"),
+      Array[Byte](0x50, 0x41, 0x52, 0x31, 0x15)) // truncated parquet
+    // readers never see staging files: the partial part is not read
+    assert(LandingIngest.readLanded(spark, out).count() == 6)
+    LandingIngest.sinkBatch(df, batchId = 2L, out, numWriters = 2) // replay
+    val landed = LandingIngest.readLanded(spark, out)
+    assert(landed.count() == 6, "crash replay must land batch 2 exactly once")
+    assert(landed.groupBy("id").count().collect().map(r =>
+      r.getLong(0) -> r.getLong(1)).toMap == Map(1L -> 3L, 2L -> 3L))
+    assert(!java.nio.file.Files.exists(staging), "replay left its staging dir")
   }
 
   test("protojson timestamps: all legal fraction widths; absent → epoch; garbage raises") {
