@@ -6,18 +6,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * derive partitioning from the input, never a constant tuned for one
   * deployment).
   *
-  * Iterative operators here (connected components, BPE training, merge
-  * replays) run several shuffles per round over a frame whose size the
-  * operator has already MEASURED (a count it needed anyway). When that
-  * frame is summary-sized — verified pairs, a word vocabulary, star
-  * edges; orders of magnitude below the corpus at ANY scale factor —
-  * per-round cost is pure stage overhead: 32 shuffle partitions × ~4
-  * stages × rounds of task-launch latency plus AQE's per-stage
-  * re-planning, measured at 2.2-2.7 s for a 150-edge component fold vs
-  * 1.1 s with the partition count derived from the measured row count
-  * and adaptive stage scheduling skipped. Above the threshold the
-  * session settings (AQE coalescing, skew handling) apply untouched —
-  * that is the 100 TB posture.
+  * Iterative operators here (BPE training and merge replays in
+  * `TextOps`, Lloyd and PQ training in `Similarity`) run several
+  * shuffles per round over a frame whose size the operator has already
+  * MEASURED (a count it needed anyway). When that frame is
+  * summary-sized — a word vocabulary, an embedding table; orders of
+  * magnitude below the corpus at ANY scale factor — per-round cost is
+  * pure stage overhead: 32 shuffle partitions × ~4 stages × rounds of
+  * task-launch latency plus AQE's per-stage re-planning. Above the
+  * threshold the session settings (AQE coalescing, skew handling)
+  * apply untouched — that is the 100 TB posture. Connected components
+  * shares only the [[smallRows]] gate: below it, it runs union-find in
+  * one task (`Dedup.connectedComponents`) instead of a loop.
   *
   * The loop shape is SESSION-ISOLATED (VERDICT r17 #2): a small loop
   * runs over a rebinding of its input frame onto a cloned session

@@ -623,49 +623,104 @@ object Dedup extends Serializable {
     * lacks. Returns (node, canon) with canon = the component's
     * minimum node id, one row per node that appears in a pair.
     *
-    * Algorithm: iterative min-label propagation with path halving —
-    * each round (1) every node takes the min of its own label and its
-    * neighbors' labels (one hash join edges⋈labels + partial-agg
-    * min), then (2) jumps to its label's label (one labels⋈labels
-    * join), which collapses chains in O(log d) instead of O(d)
-    * rounds. Labels only decrease and are bounded by the component
-    * minimum, so the fixpoint is exact, not approximate. All work is
-    * hash joins and partial aggregates on (node, lab) longs: shuffle
-    * volume per round is |edges| + |nodes|, never quadratic, and the
-    * round count is logarithmic in the largest component diameter —
-    * the standard distributed-CC shape (cf. MapReduce large/small-star).
-    * The driver-side loop runs one count per round (the fixpoint
-    * test), each a tiny aggregate over |nodes|.
+    * The pair projection is persisted and counted once, and that
+    * count picks one of two exact algorithms:
+    *  - at or below `AdaptiveShape.smallRows` directed edges (2 per
+    *    pair) the graph is summary-sized — every caller feeds verified
+    *    near-dup pairs or star edges, orders of magnitude below the
+    *    corpus — so ONE task runs union-find over it
+    *    ([[unionFindComponents]]): no shuffle, no rounds, and the
+    *    labeling is persisted lazily so re-reads (the three reads of
+    *    [[incrementalComponents]]) do not re-run it. At the gate (1M
+    *    pairs, local[4], 2 GB heap) the task took 0.4 s on a chain and
+    *    1.7-2.1 s on a random graph, peaking about 200 MB above the
+    *    heap in use before it;
+    *  - above it, distributed min-label rounds ([[labelRounds]]) run
+    *    under the caller's own session.
+    * The pair projection and the kernel's labeling are released by
+    * the end-of-query drain ([[Similarity.releaseResult]]).
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val spark = pairs.sparkSession
-    val e0 = pairs.select(col(aCol).cast("long").as("u"),
-      col(bCol).cast("long").as("v"))
-    // Both edge directions from ONE pass over the pair plan (explode,
+    val e0 = Similarity.registerForRelease(
+      pairs.select(col(aCol).cast("long").as("u"),
+          col(bCol).cast("long").as("v"))
+        .persist(StorageLevel.MEMORY_AND_DISK))
+    if (2 * e0.count() <= graft.operators.AdaptiveShape.smallRows)
+      Similarity.registerForRelease(
+        unionFindComponents(e0).persist(StorageLevel.MEMORY_AND_DISK))
+    else labelRounds(e0)
+  }
+
+  /** [[connectedComponents]] of a (u, v) long pair frame in ONE task:
+    * union-find with union-by-min, so every root is its component's
+    * minimum id. Nodes are indexed by position in the sorted distinct
+    * endpoint array (binary search; index order = id order, so the
+    * minimum index is the minimum id), and parents are an `Int` array
+    * — primitive arrays only, about 40 bytes per pair. Nothing reaches
+    * the driver; the caller bounds the pair count (the task holds the
+    * whole edge set).
+    */
+  private[graft] def unionFindComponents(pairs: DataFrame): DataFrame = {
+    import pairs.sparkSession.implicits._
+    // coalesce, not repartition: over connectedComponents' cached,
+    // already-counted pairs it is a narrow read, with no shuffle
+    pairs.coalesce(1).as[(Long, Long)].mapPartitions { it =>
+      val ends = Array.newBuilder[Long] // u0, v0, u1, v1, ...
+      it.foreach { case (u, v) => ends += u; ends += v }
+      val e = ends.result()
+      val nodes = e.clone()
+      java.util.Arrays.sort(nodes)
+      var n = 0
+      var i = 0
+      while (i < nodes.length) {
+        if (n == 0 || nodes(i) != nodes(n - 1)) { nodes(n) = nodes(i); n += 1 }
+        i += 1
+      }
+      val parent = Array.range(0, n)
+      def find(x0: Int): Int = {
+        var x = x0
+        while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+        x
+      }
+      i = 0
+      while (i < e.length) {
+        val a = find(java.util.Arrays.binarySearch(nodes, 0, n, e(i)))
+        val b = find(java.util.Arrays.binarySearch(nodes, 0, n, e(i + 1)))
+        if (a < b) parent(b) = a else if (b < a) parent(a) = b
+        i += 2
+      }
+      Iterator.range(0, n).map(j => (nodes(j), nodes(find(j))))
+    }.toDF("node", "canon")
+  }
+
+  /** [[connectedComponents]] of a (u, v) long pair frame as
+    * distributed rounds: iterative min-label propagation with path
+    * halving — each round (1) every node takes the min of its own
+    * label and its neighbors' labels (one hash join edges⋈labels +
+    * partial-agg min), then (2) jumps to its label's label (one
+    * labels⋈labels join), which collapses chains in O(log d) instead
+    * of O(d) rounds. Labels only decrease and are bounded by the
+    * component minimum, so the fixpoint is exact, not approximate.
+    * All work is hash joins and partial aggregates on (node, lab)
+    * longs: shuffle volume per round is |edges| + |nodes|, never
+    * quadratic, and the round count is logarithmic in the largest
+    * component diameter — the standard distributed-CC shape (cf.
+    * MapReduce large/small-star). The driver-side loop runs one count
+    * per round (the fixpoint test), each a tiny aggregate over |nodes|.
+    */
+  private[graft] def labelRounds(pairs: DataFrame): DataFrame = {
+    // Both edge directions from ONE pass over the pair frame (explode,
     // not self-union: the union form evaluated the caller's verify
     // join twice) and NO distinct: every caller feeds verified pairs
     // that are already row-unique, and a stray duplicate edge is
     // absorbed by the min aggregation anyway — the old distinct was a
     // full extra shuffle of the edge set for nothing (guide §2.4).
-    val edges = e0.select(explode(array(
+    // connectedComponents hands in a persisted pair frame, so each
+    // round re-reads the edges from its cache.
+    val e = pairs.select(explode(array(
         struct(col("u"), col("v")),
         struct(col("v").as("u"), col("u").as("v")))).as("e"))
       .select(col("e.u").as("u"), col("e.v").as("v"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // Scale-adaptive loop shape (guide §2: derive partitioning from
-    // the input, never a constant tuned for one deployment). The loop
-    // runs ~4 shuffles × rounds over the SAME materialized edge set,
-    // so its size is known exactly before any round runs — and on a
-    // small verified-pair graph (every CC call here feeds on verified
-    // near-dup pairs or star edges, orders of magnitude below the
-    // corpus) the per-round cost is pure stage overhead: measured on a
-    // 150-edge fold subgraph, 32 shuffle partitions + AQE's per-stage
-    // re-planning cost 2.2-2.7 s per CC vs 1.1 s with partitioning
-    // derived from the edge count and AQE's stage scheduling skipped
-    // (graft.operators.AdaptiveShape — thresholds and rationale there).
-    val edgeCount = edges.count()
-    val out = graft.operators.AdaptiveShape.withLoopFrame(edges,
-        edgeCount) { e =>
     // Iterative plans MUST truncate lineage every round: each round
     // references the previous labels twice (neighbor join + halving
     // self-join), so an un-truncated logical plan grows geometrically
@@ -716,17 +771,11 @@ object Dedup extends Serializable {
       f"${(System.nanoTime() - t0) / 1e9}%.2fs")
     require(changed == 0, s"connectedComponents did not converge in $maxRounds rounds")
     // The final labels are a narrow select over the last round's
-    // checkpoint (already materialized by its fixpoint count), so
-    // edges can release immediately and the result needs no persist +
-    // count of its own — an eager persist + count here would cost one
-    // full labels pass per CC call at any scale.
+    // checkpoint (already materialized by its fixpoint count), so the
+    // result needs no persist + count of its own — an eager persist +
+    // count here would cost one full labels pass per CC call at any
+    // scale.
     labels.select(col("node"), col("lab").as("canon"))
-    }
-    edges.unpersist(blocking = false)
-    // hand the labeling back to the CALLER's session: without this,
-    // every downstream query tail composed on it would inherit the
-    // loop posture (AQE off, summary partitions) at any scale
-    graft.operators.AdaptiveShape.rebind(out, spark)
   }
 
   /** SimHash bit width. 60 bits so every intermediate fits a positive
@@ -1106,9 +1155,8 @@ object Dedup extends Serializable {
     *  2. the affected SUBGRAPH = the stored star edges of those
     *     components (the star preserves connectivity exactly — every
     *     member reaches the canon in one hop) ∪ the new pairs.
-    *  3. [[connectedComponents]] over the subgraph — diameter ≤ 2 per
-    *     stored component, so the iterative loop converges in O(log
-    *     merge-chain) tiny rounds.
+    *  3. [[connectedComponents]] over the subgraph, whose size is
+    *     O(|new pairs| + |affected components|), not O(corpus).
     *  4. untouched stored rows pass through unchanged (anti-join on
     *     canon).
     * Exactness: the union of star edges and original edges has the
@@ -1125,10 +1173,11 @@ object Dedup extends Serializable {
   def incrementalComponents(stored: DataFrame, newPairs: DataFrame,
       aCol: String, bCol: String): DataFrame = {
     // No persist/count barrier on the stored side: every call site
-    // passes a [[connectedComponents]] output (a narrow select over a
-    // materialized checkpoint) or a landed read — re-reading it for
-    // the semi/anti joins is cache-speed, where the old persist+count
-    // here cost one full labels pass per call at any scale. The
+    // passes a [[connectedComponents]] output (a persisted kernel
+    // labeling, or a narrow select over the last round's checkpoint)
+    // or a landed read — re-reading it for the semi/anti joins is
+    // cache-speed, where a persist+count here would cost one full
+    // labels pass per call at any scale. The
     // batch-side frames (np, affectedCanons) persist LAZILY and are
     // registered for the end-of-query drain: their first consumer
     // materializes them inside a job it runs anyway.

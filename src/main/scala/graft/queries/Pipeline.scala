@@ -668,8 +668,8 @@ object Pipeline {
     * connected components over the verified near-dup graph
     * (transitivity: a~b, b~c ⇒ one cluster {a,b,c}), one canonical
     * doc (minimum id) per cluster. This is what an actual dedup run
-    * keeps/drops by. Spark side: MinHash-LSH pairs → iterative
-    * min-label propagation (Dedup.connectedComponents). Oracle:
+    * keeps/drops by. Spark side: MinHash-LSH pairs → union-find
+    * (Dedup.connectedComponents). Oracle:
     * exact all-pairs Jaccard pairs → recursive-CTE transitive
     * closure → min reachable label — a full differential test of
     * pairs AND clustering.

@@ -29,8 +29,7 @@ import java.nio.file.Paths
   *  2. affected canons' pb set (bounded: ≤ nBuckets ints) prunes the
   *     read of affected component rows at the directory level;
   *  3. the affected star edges ∪ new pairs relabel through
-  *     [[Dedup.connectedComponents]] (diameter ≤ 2 per stored
-  *     component);
+  *     [[Dedup.connectedComponents]];
   *  4. ONLY the touched partitions rewrite — dynamic partition
   *     overwrite of (surviving rows ∪ relabeled rows) for the old ∪
   *     new pb set; untouched directories are never written (and never

@@ -74,8 +74,9 @@ object ClusterStream {
     // consumed — drain this thread's result caches AND the epoch's
     // checkpoint/persisted blocks (releaseResult does not cover
     // localCheckpoint RDDs; without the sweep an unbounded stream
-    // pins one pair-set plus the fold's CC round checkpoints per
-    // epoch until a periodic GC). The sweep keys on "created during
+    // pins one checkpointed pair-set per epoch, plus the label-round
+    // checkpoints of any fold above the CC kernel gate, until a
+    // periodic GC). The sweep keys on "created during
     // this epoch", so it assumes the stream is the session's only
     // concurrently-EXECUTING workload (the standing-pipeline
     // deployment); concurrent jobs holding un-recomputable

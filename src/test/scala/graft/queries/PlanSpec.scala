@@ -810,7 +810,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q182: keep decision is a keyed join + max(struct) — no Window, no broadcast hint on dup mass") {
-    // q182.fn runs CC eagerly (label propagation materializes inside);
+    // q182.fn runs CC's gate count eagerly (pairs materialize inside);
     // the final selection plan is what this pins
     val p = plan(Pipeline.q182)
     assert(!p.contains("Window"), s"q182 plans a Window over facts:\n$p")
