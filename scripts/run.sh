@@ -1,6 +1,8 @@
 #!/bin/bash
 # Run a graft main (Verify/Bench) without sbt startup overhead.
 # Usage: scripts/run.sh graft.Verify /root/testdata/sf0.01 /tmp/verify_out
+# The classpath carries src/main/resources itself (the descriptors and
+# core-site.xml), so `sbt compile` alone is enough to run.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 ADD_OPENS=""
@@ -20,5 +22,5 @@ exec java $ADD_OPENS \
   -Dgraft.harness=run.sh \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "target/scala-2.13/classes:src/main/resources:/opt/spark/jars/*" \
   "$@"

@@ -161,7 +161,7 @@ object ServerConfig {
   * drain-then-swap posture as the reference's writer group.
   */
 final class BristleServer(configPath: Path,
-    metrics: Metrics = Metrics.default) {
+    val metrics: Metrics = Metrics.default) {
 
   import BristleServer.DrainPlan
 

@@ -3,7 +3,7 @@ package graft.net
 import graft.sources.QueueSource
 import graft.streaming.{LandingIngest, Parts, QueueIngest}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 
 import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.CountDownLatch
@@ -60,11 +60,15 @@ object ServerMain {
     * either as the batch's parquet partition or, for a `jdbc_url`
     * table, as one INSERT transaction per writer (the reference's
     * per-writer batched INSERT, clickhouse_table_writer.go:115-149).
-    * Returns the running queries keyed by queue name (exposed for
-    * [[restartDrains]] and tests).
+    * One [[DrainTelemetry]] listener reports the streams to the
+    * server's `Metrics`; [[stopDrains]] removes it. Returns the running
+    * queries keyed by queue name (exposed for [[restartDrains]] and
+    * tests).
     */
   def startDrains(spark: SparkSession,
-      server: BristleServer): Map[String, StreamingQuery] =
+      server: BristleServer): Map[String, StreamingQuery] = {
+    if (server.drains.nonEmpty) spark.streams.addListener(new DrainTelemetry(
+      server.metrics, server.drains.map(d => drainName(d.queueName) -> d.queueName).toMap))
     server.drains.map { d =>
       val landing = Paths.get(d.table.landingDir.get)
       val ckpt = landing.resolve(".ckpt").toString
@@ -81,10 +85,45 @@ object ServerMain {
               LandingIngest.sinkBatch(df, batchId, out, d.table.writers)
           }
         }
-        .queryName(s"drain-${d.queueName}")
+        .queryName(drainName(d.queueName))
         .start()
       d.queueName -> q
     }.toMap
+  }
+
+  private def drainName(queue: String): String = s"drain-$queue"
+
+  /** The phases of a landing micro-batch that [[DrainTelemetry]]
+    * reports, as Spark's `StreamingQueryProgress.durationMs` names them.
+    */
+  val DrainPhases: Seq[String] =
+    Seq("walCommit", "queryPlanning", "addBatch", "commitOffsets", "triggerExecution")
+
+  /** Each landing micro-batch of the drains named in `queues` (query
+    * name → queue), as counters by queue: batches, rows, and the ms of
+    * each of [[DrainPhases]].
+    */
+  private final class DrainTelemetry(metrics: Metrics, val queues: Map[String, String])
+      extends StreamingQueryListener {
+    metrics.help("graft_drain_batches_total", "Landing micro-batches, by queue")
+    metrics.help("graft_drain_rows_total", "Rows landed by the drain, by queue")
+    metrics.help("graft_drain_phase_ms_total",
+      "Landing micro-batch milliseconds, by queue and phase")
+
+    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
+      val p = e.progress
+      queues.get(p.name).filter(_ => p.numInputRows > 0).foreach { qn =>
+        metrics.inc("graft_drain_batches_total", "queue" -> qn)
+        metrics.add("graft_drain_rows_total", p.numInputRows, "queue" -> qn)
+        DrainPhases.foreach { ph =>
+          Option(p.durationMs.get(ph)).foreach(ms => metrics.add(
+            "graft_drain_phase_ms_total", ms.longValue, "queue" -> qn, "phase" -> ph))
+        }
+      }
+    }
+  }
 
   /** The drain half of the reload swap. Call with the old drains
     * ALREADY stopped (the HUP handler stops them before applying the
@@ -106,13 +145,24 @@ object ServerMain {
     startDrains(spark, server)
   }
 
-  /** Stop drains at a clean barrier (all buffered work flushed). */
-  def stopDrains(drains: Map[String, StreamingQuery]): Unit =
+  /** Stop drains at a clean barrier (all buffered work flushed), then
+    * remove the [[DrainTelemetry]] listener that reported them.
+    */
+  def stopDrains(drains: Map[String, StreamingQuery]): Unit = {
     drains.values.foreach { q =>
       try { q.processAllAvailable(); q.stop(); q.awaitTermination() }
       catch { case NonFatal(e) =>
         System.err.println(s"[server] drain stop: ${e.getMessage}") }
     }
+    drains.values.headOption.foreach { q =>
+      val names = drains.values.map(_.name).toSet
+      q.sparkSession.streams.listListeners().foreach {
+        case t: DrainTelemetry if t.queues.keySet == names =>
+          q.sparkSession.streams.removeListener(t)
+        case _ => ()
+      }
+    }
+  }
 
   def main(args: Array[String]): Unit = {
     val configPath = args.headOption.map(Paths.get(_)).getOrElse {

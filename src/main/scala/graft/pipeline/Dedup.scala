@@ -728,9 +728,10 @@ object Dedup extends Serializable {
     // materializes the round (executor-local blocks, no lineage); a
     // production run on an unreliable cluster would use
     // checkpoint(reliable) — same shape, recoverable blocks.
-    var labels = e.select(col("u").as("node")).distinct()
-      .withColumn("lab", col("node"))
-      .localCheckpoint(false) // lazy: round 1's action materializes it
+    // Every checkpoint goes to the end-of-query release drain.
+    var labels = Similarity.localCheckpointForRelease(
+      e.select(col("u").as("node")).distinct()
+        .withColumn("lab", col("node"))) // lazy: round 1's action materializes it
 
     var changed = 1L
     var rounds = 0
@@ -747,18 +748,18 @@ object Dedup extends Serializable {
       // not three. `stepped` is referenced on both sides of the
       // halving join; the checkpoint RDD is cached, so it computes
       // once and the second reference reads blocks.
-      val stepped = labels.join(nbrMin, Seq("node"), "left")
-        .select(col("node"), col("lab"),
-          least(col("lab"), coalesce(col("nmin"), col("lab"))).as("lab1"))
-        .localCheckpoint(false) // referenced twice below: cut before fan-in
+      // referenced twice below: cut before fan-in
+      val stepped = Similarity.localCheckpointForRelease(
+        labels.join(nbrMin, Seq("node"), "left")
+          .select(col("node"), col("lab"),
+            least(col("lab"), coalesce(col("nmin"), col("lab"))).as("lab1")))
       // (2) path halving: lab''(u) = lab'(lab'(u)) — chains collapse
       // exponentially instead of one hop per round
-      val jumped = stepped
+      val jumped = Similarity.localCheckpointForRelease(stepped
         .join(stepped.select(col("node").as("lab1"), col("lab1").as("lab2")),
           Seq("lab1"), "left")
         .select(col("node"), col("lab"),
-          coalesce(col("lab2"), col("lab1")).as("newlab"))
-        .localCheckpoint(false)
+          coalesce(col("lab2"), col("lab1")).as("newlab")))
       // ONE action: materializes stepped + jumped (truncating lineage
       // for the next round) and evaluates the fixpoint test
       changed = jumped.filter(col("newlab") =!= col("lab")).count()

@@ -269,8 +269,8 @@ object Similarity extends Serializable {
     * thread that ran the operators, so per-thread scoping is exact.
     */
   private val liveResults =
-    ThreadLocal.withInitial[java.util.ArrayDeque[DataFrame]](() =>
-      new java.util.ArrayDeque[DataFrame]())
+    ThreadLocal.withInitial[java.util.ArrayDeque[() => Unit]](() =>
+      new java.util.ArrayDeque[() => Unit]())
 
   /** Register an already-persisted (possibly lazily) DataFrame for the
     * end-of-query [[releaseResult]] drain WITHOUT forcing a
@@ -280,8 +280,25 @@ object Similarity extends Serializable {
     * frame regardless).
     */
   private[graft] def registerForRelease(df: DataFrame): DataFrame = {
-    liveResults.get().add(df)
+    liveResults.get().add(() => { df.unpersist(blocking = false); () })
     df
+  }
+
+  /** A lazy `localCheckpoint` of `df` whose checkpoint RDD the
+    * end-of-query [[releaseResult]] drain unpersists. `unpersist` on
+    * the checkpointed frame reaches only the CacheManager, so without
+    * this the RDD (marked persistent when the checkpoint is taken)
+    * stays pinned until a GC. Unlike a cache, a released checkpoint
+    * cannot recompute: read the frame before the release.
+    */
+  private[graft] def localCheckpointForRelease(df: DataFrame): DataFrame = {
+    val cp = df.localCheckpoint(eager = false)
+    cp.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        liveResults.get().add(() => { r.rdd.unpersist(blocking = false); () })
+      case _ => ()
+    }
+    cp
   }
 
   /** Cache the result and register it, together with its (still
@@ -298,23 +315,21 @@ object Similarity extends Serializable {
   private[graft] def cacheAndRelease(result: DataFrame,
       intermediates: Seq[DataFrame]): DataFrame = {
     val out = result.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val q = liveResults.get()
-    q.add(out)
-    intermediates.foreach(q.add)
+    (out +: intermediates).foreach(registerForRelease)
     out
   }
 
-  /** Drop every cache [[registerForRelease]] and [[cacheAndRelease]]
-    * recorded on THIS thread — the consumed DataFrames stay valid (they
-    * just recompute if re-read). Call from the thread that ran the
-    * operators.
+  /** Run every release [[registerForRelease]], [[cacheAndRelease]] and
+    * [[localCheckpointForRelease]] recorded on THIS thread — the
+    * consumed cached DataFrames stay valid (they just recompute if
+    * re-read). Call from the thread that ran the operators.
     */
   def releaseResult(): Unit = {
     val q = liveResults.get()
-    var prev = q.poll()
-    while (prev != null) {
-      prev.unpersist(blocking = false)
-      prev = q.poll()
+    var release = q.poll()
+    while (release != null) {
+      release()
+      release = q.poll()
     }
   }
 

@@ -71,12 +71,12 @@ object ClusterStream {
     Files.createDirectories(markerDir)
     Files.createFile(marker)
     sink(pairs, id)
-    // consumed — drain this thread's result caches AND the epoch's
-    // checkpoint/persisted blocks (releaseResult does not cover
-    // localCheckpoint RDDs; without the sweep an unbounded stream
-    // pins one checkpointed pair-set per epoch, plus the label-round
-    // checkpoints of any fold above the CC kernel gate, until a
-    // periodic GC). The sweep keys on "created during
+    // consumed — drain this thread's result caches (the label-round
+    // checkpoints of any fold above the CC kernel gate included) AND
+    // the epoch's other persisted blocks (the probe's localCheckpoint
+    // above is not registered with releaseResult; without the sweep an
+    // unbounded stream pins one checkpointed pair-set per epoch until
+    // a periodic GC). The sweep keys on "created during
     // this epoch", so it assumes the stream is the session's only
     // concurrently-EXECUTING workload (the standing-pipeline
     // deployment); concurrent jobs holding un-recomputable

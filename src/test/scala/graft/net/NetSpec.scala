@@ -418,8 +418,10 @@ class NetSpec extends SparkSpec {
 
   // ---- ServerMain landing drains -----------------------------------
 
-  test("continuous landing drain: server + drains land what the client sends") {
-    val dir = Files.createTempDirectory("netspec-drain-")
+  /** A config whose one table, `landing.example`, lands parquet under
+    * `dir/land` every 100 ms.
+    */
+  private def landingConfig(dir: Path): Path = {
     val desc = dir.resolve("example.desc")
     val in = getClass.getResourceAsStream("/descriptors/example.pb")
     Files.write(desc, in.readAllBytes()); in.close()
@@ -438,7 +440,12 @@ class NetSpec extends SparkSpec {
          |      "flush_interval": 100}
          |  }}]
          |}""".stripMargin.getBytes("UTF-8"))
-    val server = new BristleServer(cfg, new Metrics).start()
+    cfg
+  }
+
+  test("continuous landing drain: server + drains land what the client sends") {
+    val dir = Files.createTempDirectory("netspec-drain-")
+    val server = new BristleServer(landingConfig(dir), new Metrics).start()
     try {
       assert(server.drains.map(_.queueName) == Seq("landing.example"))
       val drains = ServerMain.startDrains(spark, server)
@@ -455,7 +462,47 @@ class NetSpec extends SparkSpec {
         assert(landed.columns.contains("value"))
         // bookkeeping partitions (epoch + batch id) are dropped
         assert(!landed.columns.contains("e") && !landed.columns.contains("p_batch"))
-      } finally drains.values.foreach(_.stop())
+      } finally ServerMain.stopDrains(drains)
+    } finally {
+      server.stop()
+      server.queues.keys.foreach(QueueSource.drop)
+    }
+  }
+
+  test("drain telemetry: each landed micro-batch's rows and phase ms " +
+      "by queue; stopDrains removes the listener") {
+    val dir = Files.createTempDirectory("netspec-telemetry-")
+    val metrics = new Metrics
+    val server = new BristleServer(landingConfig(dir), metrics).start()
+    val listeners = spark.streams.listListeners().length
+    try {
+      val drains = ServerMain.startDrains(spark, server)
+      assert(spark.streams.listListeners().length == listeners + 1)
+      try {
+        withClient(server.ingest.boundPort) { client =>
+          client.registerType("ExampleMessage")
+          assert(client.writeBatch("ExampleMessage",
+            (0 until 12).map(body)) == BatchResult.Ok)
+        }
+        drains.values.foreach(_.processAllAvailable())
+        // progress reaches listeners through the asynchronous bus
+        val q = "queue" -> "landing.example"
+        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        while (metrics.counterValue("graft_drain_rows_total", q) < 12 &&
+            System.nanoTime() < deadline) Thread.sleep(20)
+        assert(metrics.counterValue("graft_drain_rows_total", q) == 12)
+        val batches = metrics.counterValue("graft_drain_batches_total", q)
+        assert(batches >= 1)
+        def ms(phase: String) =
+          metrics.counterValue("graft_drain_phase_ms_total", q, "phase" -> phase)
+        assert(ms("triggerExecution") > 0)
+        assert(ms("addBatch") <= ms("triggerExecution"))
+        val text = metrics.render()
+        assert(text.contains("# TYPE graft_drain_phase_ms_total counter"))
+        for (ph <- ServerMain.DrainPhases) assert(text.contains(
+          s"""graft_drain_phase_ms_total{queue="landing.example",phase="$ph"}"""), ph)
+      } finally ServerMain.stopDrains(drains)
+      assert(spark.streams.listListeners().length == listeners)
     } finally {
       server.stop()
       server.queues.keys.foreach(QueueSource.drop)
@@ -560,7 +607,7 @@ class NetSpec extends SparkSpec {
         val rebound = graft.bind.SchemaBinder.bind(d.message, introspected)
         assert(rebound.columns.map(_.name) ==
           d.binding.columns.map(_.name))
-      } finally drains.values.foreach(_.stop())
+      } finally ServerMain.stopDrains(drains)
     } finally {
       server.stop()
       server.queues.keys.foreach(QueueSource.drop)
@@ -635,7 +682,7 @@ class NetSpec extends SparkSpec {
             r.getSeq[String](schema.fieldIndex("labels")).toList)
         })
         assert(got == want, "repeated + Nested arrays round-tripped exactly")
-      } finally drains.values.foreach(_.stop())
+      } finally ServerMain.stopDrains(drains)
     } finally {
       server.stop()
       server.queues.keys.foreach(QueueSource.drop)
@@ -696,7 +743,7 @@ class NetSpec extends SparkSpec {
           rs.next()
           assert(rs.getLong(1) == 8, "rows landed through introspected binding")
         } finally c2.close()
-      } finally drains.values.foreach(_.stop())
+      } finally ServerMain.stopDrains(drains)
       // reload pointing at a missing table: introspection throws inside
       // the compile-then-swap, registry untouched
       writeCfg("t_gone")

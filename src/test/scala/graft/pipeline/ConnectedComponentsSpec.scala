@@ -156,4 +156,18 @@ class ConnectedComponentsSpec extends SparkSpec {
     Similarity.releaseResult()
     assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
   }
+
+  test("above the gate: the label rounds' checkpoints go with the " +
+      "end-of-query release") {
+    import spark.implicits._
+    Similarity.releaseResult()
+    val before = sc.getPersistentRDDs.keySet
+    def added = sc.getPersistentRDDs.keySet.filterNot(before)
+    val pairs = (0L until 30L).map(i => (i, i + 1)) ++ Seq((100L, 101L))
+    assert(labels(Dedup.labelRounds(pairs.toDF("u", "v"))) == truth(pairs))
+    // the initial labels, then stepped + jumped per round
+    assert(added.size >= 3)
+    Similarity.releaseResult()
+    assert(added.isEmpty)
+  }
 }
