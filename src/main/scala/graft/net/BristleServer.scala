@@ -151,14 +151,14 @@ object ServerConfig {
   * reference's signal loop (`server.go:134-161`): a config that fails
   * to load or apply logs and leaves the running registry untouched.
   *
-  * Reload swap rules: a table whose (capacity, on-full) is unchanged
-  * keeps its live queue — buffered-but-undrained rows survive the
-  * reload; a changed table is rebuilt (drain first in production — the
-  * writer half of that dance is `LandingIngest.WriterGroup.reload`);
-  * a removed table's queue is dropped from the global registry.
-  * In-flight batches admitted under the old registry land through
-  * whatever queue object they already resolved — the same
-  * drain-then-swap posture as the reference's writer group.
+  * Reload swap rules: every table that stays keeps its live queue,
+  * with a changed capacity or on-full policy set in place — buffered
+  * rows, and batches admitted by payloads that resolved the queue
+  * before the swap, are read by the same drain offsets as before; a
+  * new table gets a new queue; a removed table's queue is dropped from
+  * the global registry. The writer half of the swap (stop the drains
+  * at a barrier, restart them with the new writer count) is
+  * [[ServerMain.reloadDrains]].
   */
 final class BristleServer(configPath: Path,
     val metrics: Metrics = Metrics.default) {
@@ -270,12 +270,13 @@ final class BristleServer(configPath: Path,
           "a drained table must bind exactly one")
     }
 
-    // swap queues: unchanged settings keep the live queue (and its
-    // buffered rows); changed/new rebuild; removed drop
+    // swap queues: a kept table reconfigures its live queue in place
+    // (a replaced one would strand every row admitted into the old
+    // object that no drain reads again); new create; removed drop
     val nextQueues = tablesByQname.map { case (qn, t) =>
       qn -> (queuesNow.get(qn) match {
-        case Some(q) if q.capacity == t.capacity && q.onFull == t.onFull => q
-        case _ => QueueSource.create(qn, t.capacity, t.onFull)
+        case Some(q) => q.reconfigure(t.capacity, t.onFull); q
+        case None => QueueSource.create(qn, t.capacity, t.onFull)
       })
     }
     (queuesNow.keySet -- nextQueues.keySet).foreach(QueueSource.drop)

@@ -35,13 +35,14 @@ import scala.util.control.NonFatal
   *
   * Admitted bodies land in per-message-type [[QueueSource]] queues —
   * the same admission-controlled buffers the Structured Streaming
-  * drain (`QueueIngest`/`LandingIngest`) reads — so the full path is
-  * socket → queue → micro-batch → transcode → parquet. Server-side
-  * synchronous checks mirror the reference's: unknown type →
-  * `UNK_MESSAGE`, per-body decode failure → `DECODE_ERR`, buffer
-  * policy → `FULL`/`TOO_BIG`. Per-row transcode rejection (P11)
-  * happens downstream in the drain's lenient decode path, which is
-  * where this engine's columnar transcode runs.
+  * drain (`QueueIngest.transcoded` → `LandingIngest.sinkBatch`) reads —
+  * so the full path is socket → queue → micro-batch → transcode →
+  * parquet. Server-side synchronous checks mirror the reference's:
+  * unknown type → `UNK_MESSAGE`, per-body decode failure →
+  * `DECODE_ERR`, buffer policy → `FULL`/`TOO_BIG`. There is no per-row
+  * transcode rejection (P11) at ack time: the drain decodes strictly
+  * (`ProtoRows.decode`) and transcodes in its micro-batch, after the
+  * ack. Answering `TRANSCODE_ERR` at admission is ROADMAP #4.
   *
   * Backoff: the reference schema defines server-push backoff
   * (`bristle.proto:96`) and its client honors it

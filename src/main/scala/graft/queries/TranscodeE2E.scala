@@ -159,22 +159,24 @@ object TranscodeE2E {
     })
 
   /** The same 64 fixture rows driven through the STREAMING path
-    * (D1-D5): ingest shim admission → framed landing files →
-    * binaryFile stream → decodeFramed → transcode → foreachBatch
-    * parquet append — then read back. Oracle identical to q25: the
-    * streaming pipeline must land exactly what batch transcode
-    * produces (batch-stream equivalence).
+    * (D1-D5) with ONE writer: queue admission → a micro-batch read as
+    * one slice → decode → transcode → foreachBatch parquet append —
+    * then read back. Oracle identical to q25: the streaming pipeline
+    * must land exactly what batch transcode produces (batch-stream
+    * equivalence). q41 lands the same rows with two writers, so the
+    * pair covers the one-slice and the multi-slice plan.
     */
   val q33 = Q(
     "q33_stream_transcode",
     (spark, _) => {
-      import graft.streaming.{LandingIngest, RowBuffer}
+      import graft.streaming.{QueueIngest, RowBuffer}
       val binding = SchemaBinder.bind(message, table)
       val batches = fixtures.grouped(MsgsPerFrame)
         .map(_.map(f => ProtoRows.encodeValues(message, f.protoValues)))
         .toSeq
-      LandingIngest.runOnce(spark, message, binding, batches,
-          maxBufferSize = NumRows, onFull = RowBuffer.Block)
+      QueueIngest.runOnce(spark, message, binding, batches,
+          capacity = NumRows, onFull = RowBuffer.Block, numWriters = 1,
+          name = "q33")
         .transform(sinkSelect)
     },
     q25.oracle)

@@ -37,24 +37,37 @@ object QueueSource {
     StructField("value", BinaryType, nullable = false)))
 
   /** Admission-controlled, offset-addressed message log. */
-  final class IngestQueue(val capacity: Int, val onFull: RowBuffer.OnFull) {
+  final class IngestQueue(capacity0: Int, onFull0: RowBuffer.OnFull) {
     private val log = scala.collection.mutable.ArrayDeque.empty[Array[Byte]]
     private var first: Long = 0L // seq of log.head
+    private var cap = capacity0
+    private var policy = onFull0
 
+    def capacity: Int = synchronized(cap)
+    def onFull: RowBuffer.OnFull = synchronized(policy)
     def firstSeq: Long = synchronized(first)
     def endSeq: Long = synchronized(first + log.size)
 
-    /** RowBuffer-policy admission (same observable semantics,
-      * StreamingSpec quirks included); drop-oldest eviction advances
+    /** New admission settings for the writes that follow. Rows already
+      * admitted stay, even above a shrunk capacity: they were acked, and
+      * the drain reading this queue's offsets lands them.
+      */
+    def reconfigure(capacity: Int, onFull: RowBuffer.OnFull): Unit = synchronized {
+      cap = capacity
+      policy = onFull
+    }
+
+    /** Admission under the [[RowBuffer]] on-full policies (StreamingSpec
+      * pins their quirks); drop-oldest eviction advances
       * the readable start — shed rows are gone before durability,
       * exactly like the reference.
       */
     def writeBatch(batch: Seq[Array[Byte]]): RowBuffer.WriteResult = synchronized {
       val bs = batch.size
-      if (bs > capacity) return RowBuffer.TooBig
-      val spare = capacity - log.size
+      if (bs > cap) return RowBuffer.TooBig
+      val spare = cap - log.size
       var toAppend = batch
-      if (spare < bs) onFull match {
+      if (spare < bs) policy match {
         case RowBuffer.DropOldest =>
           val evict = bs - spare
           log.remove(0, evict)

@@ -2,8 +2,9 @@ package graft.streaming
 
 import scala.collection.mutable
 
-/** Producer-side client pipeline (D9/D10/D11) against an
-  * [[LandingIngest.IngestShim]]-shaped sink — observable semantics
+/** Producer-side client pipeline (D9/D10/D11) against any sink that
+  * answers a batch with a [[RowBuffer.WriteResult]] (an ingest queue,
+  * a socket or gRPC client) — observable semantics
   * match the reference client:
   *
   *  - per-type buffering with a shared per-type capacity; a write is

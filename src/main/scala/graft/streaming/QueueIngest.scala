@@ -8,11 +8,13 @@ import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
 
-/** The QueueSource twin of [[LandingIngest.runOnce]]: admit message
-  * batches through the source's own admission control, stream them out
-  * of the custom MicroBatchStream, transcode, and land with the
-  * idempotent batch sink — S1/S2's engine contract end-to-end through
-  * a real DataSourceV2 source instead of the file shim.
+/** The ingest drain: admit message batches through the
+  * [[QueueSource]]'s own admission control, stream them out of its
+  * MicroBatchStream, decode + transcode, and land with the idempotent
+  * batch sink — S1/S2's engine contract end-to-end through a real
+  * DataSourceV2 source. The server's continuous drains
+  * ([[graft.net.ServerMain.startDrains]]) run the same [[transcoded]]
+  * stream.
   */
 object QueueIngest {
 

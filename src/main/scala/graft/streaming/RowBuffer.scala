@@ -1,24 +1,21 @@
 package graft.streaming
 
-/** Bounded in-memory batch buffer with bristle's on-full admission
-  * policies (D1/D2) — observable semantics match the reference
+/** bristle's on-full admission policies (D1) and write results. The
+  * buffer that applies them is [[graft.sources.QueueSource.IngestQueue]],
+  * whose observable semantics match the reference
   * (memory_row_buffer.go:47-107) exactly, including its quirks:
   *
-  *  - a batch larger than maxSize is rejected whole (TooBig);
+  *  - a batch larger than the capacity is rejected whole (TooBig);
   *  - `DropOldest` evicts from the FRONT of the buffer to fit the
   *    whole incoming batch;
   *  - `DropNewest` truncates the incoming batch to its TAIL
   *    (batch[batchSize-spareRoom:]) — i.e. it actually drops the
   *    head of the new batch, a reference quirk we preserve
   *    (memory_row_buffer.go:79-80);
-  *  - `Block` rejects the write (Full) and buffers nothing;
-  *  - flush drains at most `n` items from the front (FIFO).
+  *  - `Block` rejects the write (Full) and buffers nothing.
   *
-  * In the Spark pipeline this object lives at the ingest shim — the
-  * admission control in front of the landing directory a streaming
-  * query reads. Spark's own source backpressure (maxFilesPerTrigger)
-  * handles flow *after* admission; this models the load-shedding
-  * decision bristle makes *before* a row is durable.
+  * This is the load-shedding decision bristle makes *before* a row is
+  * durable; a landing micro-batch then drains everything admitted.
   */
 object RowBuffer {
   sealed trait OnFull
@@ -35,42 +32,4 @@ object RowBuffer {
     * ingest_service.go:185,219-227 TOO_MANY_IN_FLIGHT_BATCHES).
     */
   case object TooManyInFlight extends WriteResult
-}
-
-final class RowBuffer[T](val maxSize: Int, val onFull: RowBuffer.OnFull) {
-  import RowBuffer._
-  require(maxSize > 0, "maxSize must be positive")
-
-  private val buffer = scala.collection.mutable.ArrayDeque.empty[T]
-
-  def size: Int = synchronized(buffer.size)
-
-  def writeBatch(batch: Seq[T]): WriteResult = synchronized {
-    val batchSize = batch.size
-    if (batchSize > maxSize) return TooBig
-    val spareRoom = maxSize - buffer.size
-    var toAppend = batch
-    if (spareRoom < batchSize) {
-      onFull match {
-        case DropOldest =>
-          buffer.remove(0, batchSize - spareRoom)
-        case DropNewest =>
-          toAppend = batch.drop(batchSize - spareRoom)
-        case Block =>
-          return Full
-      }
-    }
-    buffer.appendAll(toAppend)
-    Ok
-  }
-
-  /** Drain at most `batchSize` items from the front. */
-  def flushBatch(batchSize: Int): Seq[T] = synchronized {
-    val n = math.min(batchSize, buffer.size)
-    val out = buffer.take(n).toSeq
-    buffer.remove(0, n)
-    out
-  }
-
-  def drainAll(): Seq[T] = flushBatch(Int.MaxValue)
 }

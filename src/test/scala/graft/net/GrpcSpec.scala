@@ -415,9 +415,9 @@ class GrpcSpec extends org.scalatest.funsuite.AnyFunSuite {
     // NetSpec pins reload semantics for the socket endpoint; this
     // pins that the SAME atomic swap is what a live gRPC session
     // resolves against (shared engine, per-batch target resolution):
-    // unchanged tables keep their queue and buffered rows across the
-    // swap, a changed table rebuilds, and the client connection
-    // survives both.
+    // every kept table keeps its queue and buffered rows across the
+    // swap, a changed table is reconfigured in place, and the client
+    // connection survives both.
     import java.nio.file.Files
     val dir = Files.createTempDirectory("grpcspec-reload-")
     val desc = dir.resolve("example.desc")
@@ -459,17 +459,18 @@ class GrpcSpec extends org.scalatest.funsuite.AnyFunSuite {
           (3 until 5).map(body)) == BatchResult.Ok)
         assert(q1.endSeq - q1.firstSeq == 5)
 
-        // changed capacity → rebuilt queue; the SAME live connection
-        // (and its registered type id) resolves the new queue on the
-        // next batch, old buffered rows stay with the old object
+        // changed capacity → the SAME queue, reconfigured in place; the
+        // SAME live connection (and its registered type id) keeps
+        // landing into it after the buffered rows
         writeCfg(capacity = 32)
         assert(server.reload().isRight)
         val q2 = server.queues("landing.example")
-        assert(q2.capacity == 32 && !(q2 eq q1))
+        assert(q2 eq q1)
+        assert(q2.capacity == 32 && q2.endSeq - q2.firstSeq == 5)
         assert(client.writeBatch("ExampleMessage",
           (5 until 9).map(body)) == BatchResult.Ok)
-        assert(q2.endSeq - q2.firstSeq == 4)
-        assert(q2.slice(0, 4).map(_._2.toSeq) == (5 until 9).map(body(_).toSeq))
+        assert(q2.endSeq - q2.firstSeq == 9)
+        assert(q2.slice(0, 9).map(_._2.toSeq) == (0 until 9).map(body(_).toSeq))
       } finally client.close()
     } finally {
       server.stop()

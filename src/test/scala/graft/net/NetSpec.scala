@@ -316,11 +316,14 @@ class NetSpec extends SparkSpec {
       // checkouts drain)
       assert(server.targets("ExampleMessage").scratch eq pool1)
 
-      // changed capacity → rebuilt queue, pool still continuous
+      // changed capacity → the SAME queue, reconfigured in place: its
+      // buffered rows stay readable at the drain's offsets; pool still
+      // continuous
       writeConfig(dir, capacity = 32)
       assert(server.reload().isRight)
       val q2 = server.queues("landing.example")
-      assert(q2.capacity == 32 && !(q2 eq q1))
+      assert(q2 eq q1)
+      assert(q2.capacity == 32 && q2.endSeq - q2.firstSeq == 2)
       assert(!server.queues.contains("landing.extra"))
       assert(server.targets("ExampleMessage").scratch eq pool1)
 
@@ -418,34 +421,9 @@ class NetSpec extends SparkSpec {
 
   // ---- ServerMain landing drains -----------------------------------
 
-  /** A config whose one table, `landing.example`, lands parquet under
-    * `dir/land` every 100 ms.
-    */
-  private def landingConfig(dir: Path): Path = {
-    val desc = dir.resolve("example.desc")
-    val in = getClass.getResourceAsStream("/descriptors/example.pb")
-    Files.write(desc, in.readAllBytes()); in.close()
-    val cols = TranscodeE2E.table.map { c =>
-      s"""{"name": "${c.name}", "type": "${c.typeString}"}"""
-    }.mkString("[", ", ", "]")
-    val cfg = dir.resolve("config.json")
-    Files.write(cfg,
-      s"""{
-         |  "ingest": {"bind_port": 0},
-         |  "proto_descriptor_paths": ["$desc"],
-         |  "catalogs": [{"name": "landing", "tables": {
-         |    "example": {"capacity": 256, "on_full": "block",
-         |      "messages": ["ExampleMessage"], "columns": $cols,
-         |      "landing_dir": "${dir.resolve("land")}",
-         |      "flush_interval": 100}
-         |  }}]
-         |}""".stripMargin.getBytes("UTF-8"))
-    cfg
-  }
-
   test("continuous landing drain: server + drains land what the client sends") {
     val dir = Files.createTempDirectory("netspec-drain-")
-    val server = new BristleServer(landingConfig(dir), new Metrics).start()
+    val server = new BristleServer(LandingConfig.write(dir), new Metrics).start()
     try {
       assert(server.drains.map(_.queueName) == Seq("landing.example"))
       val drains = ServerMain.startDrains(spark, server)
@@ -460,9 +438,35 @@ class NetSpec extends SparkSpec {
           spark, dir.resolve("land/data").toString)
         assert(landed.count() == 16)
         assert(landed.columns.contains("value"))
-        // bookkeeping partitions (epoch + batch id) are dropped
-        assert(!landed.columns.contains("e") && !landed.columns.contains("p_batch"))
+        // the bookkeeping batch-id partition is dropped
+        assert(!landed.columns.contains("p_batch"))
       } finally ServerMain.stopDrains(drains)
+    } finally {
+      server.stop()
+      server.queues.keys.foreach(QueueSource.drop)
+    }
+  }
+
+  test("a landed micro-batch releases its rows' admission room") {
+    // the queue is full when its one micro-batch lands; with no new
+    // rows Spark plans no next batch, so only the release after the
+    // commit lets a blocked writer in again
+    val dir = Files.createTempDirectory("netspec-release-")
+    val server = new BristleServer(LandingConfig.write(dir, capacity = 16),
+      new Metrics).start()
+    try {
+      val drains = ServerMain.startDrains(spark, server)
+      try withClient(server.ingest.boundPort) { client =>
+        client.registerType("ExampleMessage")
+        assert(client.writeBatch("ExampleMessage",
+          (0 until 16).map(body), retryTimes = 0) == BatchResult.Ok)
+        drains.values.foreach(_.processAllAvailable())
+        assert(client.writeBatch("ExampleMessage",
+          (16 until 32).map(body), retryTimes = 50) == BatchResult.Ok)
+        drains.values.foreach(_.processAllAvailable())
+      } finally ServerMain.stopDrains(drains)
+      assert(graft.streaming.LandingIngest.readLanded(
+        spark, dir.resolve("land/data").toString).count() == 32)
     } finally {
       server.stop()
       server.queues.keys.foreach(QueueSource.drop)
@@ -473,7 +477,7 @@ class NetSpec extends SparkSpec {
       "by queue; stopDrains removes the listener") {
     val dir = Files.createTempDirectory("netspec-telemetry-")
     val metrics = new Metrics
-    val server = new BristleServer(landingConfig(dir), metrics).start()
+    val server = new BristleServer(LandingConfig.write(dir), metrics).start()
     val listeners = spark.streams.listListeners().length
     try {
       val drains = ServerMain.startDrains(spark, server)

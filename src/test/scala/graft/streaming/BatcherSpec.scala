@@ -118,12 +118,12 @@ class BatcherSpec extends AnyFunSuite {
   }
 
   test("end-to-end: batcher feeding an ingest shim's buffer") {
-    val buffer = new RowBuffer[Array[Byte]](8, RowBuffer.Block)
-    val b = new Batcher(8, (_, ms) => buffer.writeBatch(ms), retryTimes = 0)
+    val queue = new graft.sources.QueueSource.IngestQueue(8, RowBuffer.Block)
+    val b = new Batcher(8, (_, ms) => queue.writeBatch(ms), retryTimes = 0)
     b.writeBatch("t", (1 to 6).map(msg))
     assert(b.flush() == Map("t" -> Right(())))
     b.writeBatch("t", (1 to 6).map(msg))
-    assert(b.flush() == Map("t" -> Left(RetriesExhausted))) // buffer has 6/8
-    assert(buffer.drainAll().size == 6)
+    assert(b.flush() == Map("t" -> Left(RetriesExhausted))) // queue has 6/8
+    assert(queue.endSeq - queue.firstSeq == 6)
   }
 }

@@ -4,6 +4,8 @@ import java.lang.reflect.{InvocationHandler, Method, Proxy}
 import java.sql.{Connection, DriverManager, SQLException}
 
 import graft.SparkSpec
+import graft.sources.QueueSource
+import org.apache.spark.sql.DataFrame
 
 /** D5 seam, EXERCISED (VERDICT r9 #5): the transactional batch
   * INSERT semantics the reference lands in ClickHouse
@@ -302,11 +304,11 @@ class JdbcSinkSpec extends SparkSpec {
   test("full ingest pipeline lands into a SQL engine: shim admission → " +
       "streaming transcode → JDBC tx sink") {
     // The reference's actual topology with a real SQL engine at the
-    // end: framed proto batches through RowBuffer admission, the
-    // streaming decode/bind/transcode, then LandingIngest.start's
-    // sink override pointing at JdbcSink instead of parquet. Scalar
-    // projection only — array columns are the documented dialect seam
-    // (ClickHouse JDBC takes them; Derby has no ARRAY type).
+    // end: proto batches through the ingest queue's admission, the
+    // drain's streaming decode/bind/transcode, then a foreachBatch
+    // into JdbcSink instead of parquet. Scalar projection only — array
+    // columns are the documented dialect seam (ClickHouse JDBC takes
+    // them; Derby has no ARRAY type).
     import graft.bind.SchemaBinder
     import graft.proto.ProtoRows
     import graft.queries.TranscodeE2E
@@ -322,21 +324,24 @@ class JdbcSinkSpec extends SparkSpec {
       st.execute(JdbcSink.ddlFor("t_e2e", expected.schema))
       st.close()
     }
-    val base = java.nio.file.Files.createTempDirectory("jdbc-e2e-")
-    val shim = new LandingIngest.IngestShim(base.resolve("landing"),
-      maxBufferSize = 1000, onFull = RowBuffer.Block)
-    TranscodeE2E.fixtures.grouped(8).foreach { g =>
-      assert(shim.writeBatch(g.map(f =>
-        ProtoRows.encodeValues(TranscodeE2E.message, f.protoValues)))
-        == RowBuffer.Ok)
-    }
-    shim.flushAll()
-    val sq = LandingIngest.start(spark, TranscodeE2E.message, binding,
-      base.resolve("landing").toString, outDir = "",
-      base.resolve("ckpt").toString, availableNow = true,
-      sink = Some((df, id) => JdbcSink.sinkBatch(
-        df.selectExpr(scalarCols: _*), id, url, "t_e2e")))
-    sq.awaitTermination()
+    val ckpt = java.nio.file.Files.createTempDirectory("jdbc-e2e-")
+    val qn = "jdbcsinkspec-e2e"
+    val queue = QueueSource.create(qn, capacity = 1000, onFull = RowBuffer.Block)
+    try {
+      TranscodeE2E.fixtures.grouped(8).foreach { g =>
+        assert(queue.writeBatch(g.map(f =>
+          ProtoRows.encodeValues(TranscodeE2E.message, f.protoValues)))
+          == RowBuffer.Ok)
+      }
+      val sq = QueueIngest.transcoded(spark, qn, 2, TranscodeE2E.message, binding)
+        .writeStream
+        .option("checkpointLocation", ckpt.toString)
+        .foreachBatch { (df: DataFrame, id: Long) =>
+          JdbcSink.sinkBatch(df.selectExpr(scalarCols: _*), id, url, "t_e2e")
+        }
+        .start()
+      try sq.processAllAvailable() finally sq.stop()
+    } finally QueueSource.drop(qn)
     assert(countRows("t_e2e") === expected.count())
     // value-level check: per-name sums match the batch transcode
     val landed = withConn { c =>

@@ -4,61 +4,75 @@ import graft.SparkSpec
 import graft.bind.SchemaBinder
 import graft.proto.ProtoRows
 import graft.queries.TranscodeE2E
+import graft.sources.QueueSource
 import org.apache.spark.sql.functions._
 
-/** D1-D5 semantics: buffer policy parity with the reference
-  * (memory_row_buffer.go:47-107) and batch/stream equivalence of the
-  * transcode pipeline.
+/** D1-D7 semantics: buffer policy parity with the reference
+  * (memory_row_buffer.go:47-107) on the ingest queue, batch/stream
+  * equivalence of the transcode pipeline, the server's reload swap
+  * and the streaming session's in-flight admission.
   */
 class StreamingSpec extends SparkSpec {
   import RowBuffer._
 
-  private def buf(size: Int, p: OnFull) = new RowBuffer[Int](size, p)
+  private def queue(capacity: Int, p: OnFull) =
+    new QueueSource.IngestQueue(capacity, p)
+  private def rows(xs: Seq[Int]): Seq[Array[Byte]] = xs.map(x => Array(x.toByte))
+  private def held(q: QueueSource.IngestQueue): Seq[Int] =
+    q.bodies(q.firstSeq, q.endSeq)._2.map(_(0).toInt).toSeq
+  private def depth(q: QueueSource.IngestQueue): Long = q.endSeq - q.firstSeq
 
   test("oversize batch rejected whole (TOO_BIG)") {
-    val b = buf(4, Block)
-    assert(b.writeBatch(1 to 5) == TooBig)
-    assert(b.size == 0)
+    val q = queue(4, Block)
+    assert(q.writeBatch(rows(1 to 5)) == TooBig)
+    assert(depth(q) == 0)
   }
 
   test("drop-oldest evicts the front of the buffer") {
-    val b = buf(4, DropOldest)
-    assert(b.writeBatch(Seq(1, 2, 3)) == Ok)
-    assert(b.writeBatch(Seq(4, 5, 6)) == Ok)
+    val q = queue(4, DropOldest)
+    assert(q.writeBatch(rows(Seq(1, 2, 3))) == Ok)
+    assert(q.writeBatch(rows(Seq(4, 5, 6))) == Ok)
     // needs 2 more slots → evicts 1, 2; buffer = [3, 4, 5, 6]
-    assert(b.drainAll() == Seq(3, 4, 5, 6))
+    assert(held(q) == Seq(3, 4, 5, 6))
   }
 
   test("drop-newest keeps the TAIL of the incoming batch (head-drop quirk)") {
-    val b = buf(4, DropNewest)
-    assert(b.writeBatch(Seq(1, 2, 3)) == Ok)
-    assert(b.writeBatch(Seq(4, 5, 6)) == Ok)
+    val q = queue(4, DropNewest)
+    assert(q.writeBatch(rows(Seq(1, 2, 3))) == Ok)
+    assert(q.writeBatch(rows(Seq(4, 5, 6))) == Ok)
     // spareRoom=1: reference keeps batch[2:] = [6] — drops the HEAD
     // of the new batch, not its tail (memory_row_buffer.go:79-80)
-    assert(b.drainAll() == Seq(1, 2, 3, 6))
+    assert(held(q) == Seq(1, 2, 3, 6))
   }
 
   test("block returns FULL and buffers nothing") {
-    val b = buf(4, Block)
-    assert(b.writeBatch(Seq(1, 2, 3)) == Ok)
-    assert(b.writeBatch(Seq(4, 5)) == Full)
-    assert(b.drainAll() == Seq(1, 2, 3))
+    val q = queue(4, Block)
+    assert(q.writeBatch(rows(Seq(1, 2, 3))) == Ok)
+    assert(q.writeBatch(rows(Seq(4, 5))) == Full)
+    assert(held(q) == Seq(1, 2, 3))
   }
 
   test("exact-fit batch needs no policy") {
-    val b = buf(4, Block)
-    assert(b.writeBatch(Seq(1, 2)) == Ok)
-    assert(b.writeBatch(Seq(3, 4)) == Ok)
-    assert(b.size == 4)
+    val q = queue(4, Block)
+    assert(q.writeBatch(rows(Seq(1, 2))) == Ok)
+    assert(q.writeBatch(rows(Seq(3, 4))) == Ok)
+    assert(depth(q) == 4)
   }
 
   test("flush drains FIFO in chunks (D2)") {
-    val b = buf(10, Block)
-    b.writeBatch(1 to 7)
-    assert(b.flushBatch(3) == Seq(1, 2, 3))
-    assert(b.flushBatch(3) == Seq(4, 5, 6))
-    assert(b.flushBatch(3) == Seq(7))
-    assert(b.flushBatch(3).isEmpty)
+    val q = queue(10, Block)
+    q.writeBatch(rows(1 to 7))
+    // a reader takes [start, start + n) and commits it, as a drain
+    // micro-batch does with its offsets
+    def chunk(n: Int): Seq[Int] = {
+      val (start, bodies) = q.bodies(q.firstSeq, q.firstSeq + n)
+      q.truncate(start + bodies.length)
+      bodies.map(_(0).toInt).toSeq
+    }
+    assert(chunk(3) == Seq(1, 2, 3))
+    assert(chunk(3) == Seq(4, 5, 6))
+    assert(chunk(3) == Seq(7))
+    assert(chunk(3).isEmpty)
   }
 
   test("streaming pipeline lands exactly what batch transcode produces") {
@@ -67,8 +81,8 @@ class StreamingSpec extends SparkSpec {
       .map(_.map(f => ProtoRows.encodeValues(TranscodeE2E.message, f.protoValues)))
       .toSeq
 
-    val streamed = LandingIngest.runOnce(spark, TranscodeE2E.message, binding,
-      batches, maxBufferSize = 1000, onFull = Block)
+    val streamed = QueueIngest.runOnce(spark, TranscodeE2E.message, binding,
+      batches, capacity = 1000, onFull = Block, name = "streamingspec-equivalence")
 
     import spark.implicits._
     val batch = binding.transcode(ProtoRows.decodeFramed(
@@ -87,54 +101,112 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("D7 in-flight admission: excess concurrent batches rejected, never queued") {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val base = java.nio.file.Files.createTempDirectory("graft-admission-")
-    val shim = new LandingIngest.IngestShim(base.resolve("landing"),
-      maxBufferSize = 1000, onFull = Block, maxInFlight = 3)
-    // saturate the session: 3 writes in flight
-    assert((1 to 3).forall(_ => shim.tryBeginStreamingWrite()))
-    assert(shim.inFlightNow == 3)
-    // 4th concurrent batch is rejected immediately (reference
-    // TryAcquire — it does NOT block waiting for a permit)
-    val r = Await.result(shim.writeBatchAsync(Seq(Array[Byte](1))), 5.seconds)
-    assert(r == TooManyInFlight)
-    assert(shim.buffer.size == 0, "rejected batch must not be buffered")
-    // permits released → the same write is admitted and lands
-    (1 to 3).foreach(_ => shim.endStreamingWrite())
-    val ok = Await.result(shim.writeBatchAsync(Seq(Array[Byte](1))), 5.seconds)
-    assert(ok == Ok && shim.buffer.size == 1)
-    // async batches release their own permit on completion
-    val rs = Future.sequence((1 to 20).map(_ =>
-      shim.writeBatchAsync(Seq(Array[Byte](2)))))
-    Await.result(rs, 10.seconds)
-    assert(shim.inFlightNow == 0)
+    import graft.net.{IngestEngine, IngestServer, Metrics}
+    import graft.net.ControlProto._
+    import java.util.concurrent.{CountDownLatch, Executors, LinkedBlockingQueue, TimeUnit}
+    val q = queue(1000, Block)
+    val pool = Executors.newSingleThreadExecutor()
+    val engine = new IngestEngine(
+      () => Map("ExampleMessage" -> IngestServer.Target(TranscodeE2E.message, q)),
+      maxInFlight = 3, backoffHighWater = 1.0, backoffMs = 250, new Metrics, pool)
+    val sent = new LinkedBlockingQueue[ServerMessage]()
+    val session = new engine.Session(m => { sent.add(m); () })
+    val data = graft.proto.Wire.joinFrames(Seq(ProtoRows.encodeValues(
+      TranscodeE2E.message, TranscodeE2E.fixtures(0).protoValues)))
+    def batch(id: Int) = ClientWriteBatch(id, Some("ExampleMessage"), None, 1, data)
+    /** Block the pool's one thread until the returned latch opens. */
+    def blockPool(): CountDownLatch = {
+      val gate = new CountDownLatch(1)
+      pool.submit[Unit](() => gate.await())
+      gate
+    }
+    def tooMany(id: Int) = ServerWriteBatchResult(id, BatchResult.TooManyInFlightBatches)
+    try {
+      val gate = blockPool()
+      // saturate the session: 3 batches hold permits, queued on the pool
+      (1 to 3).foreach(i => assert(session.handle(batch(i))))
+      assert(sent.isEmpty)
+      // the 4th is answered at once (reference TryAcquire — it does NOT
+      // block waiting for a permit) and admits nothing
+      assert(session.handle(batch(4)))
+      assert(sent.poll() == tooMany(4))
+      assert(depth(q) == 0, "rejected batch must not be buffered")
+      gate.countDown()
+      val acks = Seq.fill(3)(sent.poll(10, TimeUnit.SECONDS))
+      assert(acks.toSet == (1 to 3).map(ServerWriteBatchResult(_, BatchResult.Ok)).toSet)
+      assert(depth(q) == 3)
+      // the batches' own permit release runs after their ack: wait for
+      // the pool to finish them, then all three permits are free again
+      pool.submit[Unit](() => ()).get(10, TimeUnit.SECONDS)
+      val gate2 = blockPool()
+      (5 to 7).foreach(i => assert(session.handle(batch(i))))
+      assert(sent.isEmpty, "a freed permit was still held")
+      assert(session.handle(batch(8)))
+      assert(sent.poll() == tooMany(8))
+      gate2.countDown()
+      assert(Seq.fill(3)(sent.poll(10, TimeUnit.SECONDS)).forall(
+        _.asInstanceOf[ServerWriteBatchResult].result == BatchResult.Ok))
+    } finally { pool.shutdownNow(); () }
   }
 
   test("D6 writer group: drain-and-swap loses and duplicates nothing") {
-    val binding = SchemaBinder.bind(TranscodeE2E.message, TranscodeE2E.table)
+    // The server's own reload path: a batch acked while the drains are
+    // stopped, then a reload that changes the writer count AND shrinks
+    // the queue below the rows it holds, must still land once.
+    import graft.net.{BristleServer, IngestClient, LandingConfig, Metrics, ServerMain}
+    import graft.net.ControlProto.BatchResult
+    import java.nio.file.Files
     val msgs = TranscodeE2E.fixtures
       .map(f => ProtoRows.encodeValues(TranscodeE2E.message, f.protoValues))
-    val base = java.nio.file.Files.createTempDirectory("graft-wg-")
-    val shim = new LandingIngest.IngestShim(base.resolve("landing"),
-      maxBufferSize = 1000, onFull = Block)
-    val group = new LandingIngest.WriterGroup(spark, TranscodeE2E.message,
-      binding, shim, base.resolve("landing").toString,
-      base.resolve("out").toString, base.resolve("ckpt").toString,
-      writers = 1)
+    val (a, b, c) = (msgs.take(16), msgs.slice(16, 32), msgs.drop(32))
+    val dir = Files.createTempDirectory("graft-reload-")
+    val server = new BristleServer(
+      LandingConfig.write(dir, capacity = 64, writers = 1), new Metrics).start()
+    val client = new IngestClient("127.0.0.1", server.ingest.boundPort)
+    def write(rows: Seq[Array[Byte]], retryTimes: Int = 0): Unit = assert(
+      client.writeBatch("ExampleMessage", rows, retryTimes) == BatchResult.Ok)
+    val data = dir.resolve("land/data")
+    def batchDirs: Set[String] =
+      Option(data.toFile.list()).toSet.flatten.filter(_.startsWith("p_batch="))
+    var drains = ServerMain.startDrains(spark, server)
+    def landAll(): Unit = drains.values.foreach(_.processAllAvailable())
+    var beforeReload = Set.empty[String]
     try {
-      shim.writeBatch(msgs.take(32))
-      group.drain()
-      group.reload(newWriters = 3) // hot swap mid-stream
-      assert(group.numWriters == 3)
-      shim.writeBatch(msgs.drop(32))
-    } finally group.stop()
-    val landed = spark.read.parquet(base.resolve("out").toString)
-      .drop("p_batch")
+      client.registerType("ExampleMessage")
+      write(a)
+      landAll()
+      beforeReload = batchDirs
+      ServerMain.stopDrains(drains)
+      drains = Map.empty
+      val q = server.queues("landing.example")
+      write(b) // acked while no drain runs
+      LandingConfig.write(dir, capacity = 12, writers = 3) // 12 < B's 16 rows
+      drains = ServerMain.reloadDrains(spark, server, drains)
+      assert(server.drains.map(_.table.writers) == Seq(3))
+      assert(server.queues("landing.example") eq q)
+      assert(q.capacity == 12)
+      landAll()
+      // the drain releases B's rows when the listener bus delivers the
+      // batch's progress, just after landAll returns, so C may first
+      // meet FULL at the shrunk capacity; the client retries FULL, as
+      // the reference's does
+      c.grouped(8).foreach { g => write(g, retryTimes = 50); landAll() }
+    } finally {
+      ServerMain.stopDrains(drains)
+      client.close()
+      server.stop()
+      server.queues.keys.foreach(QueueSource.drop)
+    }
+    val landed = LandingIngest.readLanded(spark, data.toString)
     assert(landed.count() == TranscodeE2E.NumRows, "row lost or duplicated")
     val values = landed.select("value").collect().map(_.getLong(0)).sorted
     assert(values.toSeq == TranscodeE2E.fixtures.map(_.value).sorted)
+    // one writer wrote every batch before the reload, three wrote each
+    // of the five after it (B and C's four groups)
+    val files = batchDirs.toSeq.map(b =>
+      b -> data.resolve(b).toFile.list().count(_.endsWith(".parquet")))
+    assert(files.forall { case (b, n) => n == (if (beforeReload(b)) 1 else 3) }, files)
+    assert(files.count { case (b, _) => !beforeReload(b) } == 5, files)
   }
 
   test("P11 lenient decode dead-letters bad rows; parity path still fails whole batch") {
@@ -235,8 +307,9 @@ class StreamingSpec extends SparkSpec {
       .map(f => ProtoRows.encodeValues(TranscodeE2E.message, f.protoValues))
     // capacity 16, batches of 8: first two admitted, the rest dropped
     // entirely (spareRoom 0 → batch.drop(8) = empty)
-    val streamed = LandingIngest.runOnce(spark, TranscodeE2E.message, binding,
-      msgs.grouped(8).toSeq, maxBufferSize = 16, onFull = DropNewest)
+    val streamed = QueueIngest.runOnce(spark, TranscodeE2E.message, binding,
+      msgs.grouped(8).toSeq, capacity = 16, onFull = DropNewest,
+      name = "streamingspec-drop-newest")
     assert(streamed.count() == 16)
     // the admitted rows are fixtures 0..15 (FIFO front of the stream)
     val values = streamed.select("value").collect().map(_.getLong(0)).sorted
