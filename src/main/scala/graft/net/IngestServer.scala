@@ -35,7 +35,7 @@ import scala.util.control.NonFatal
   *
   * Admitted bodies land in per-message-type [[QueueSource]] queues —
   * the same admission-controlled buffers the Structured Streaming
-  * drain (`QueueIngest.transcoded` → `LandingIngest.sinkBatch`) reads —
+  * drain (`QueueIngest.transcoded` → the `LandingSinkProvider` sink) reads —
   * so the full path is socket → queue → micro-batch → transcode →
   * parquet. Server-side synchronous checks mirror the reference's:
   * unknown type → `UNK_MESSAGE`, per-body decode failure →

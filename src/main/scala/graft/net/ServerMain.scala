@@ -4,8 +4,9 @@ import graft.streaming.{LandingIngest, QueueIngest}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 
-import java.nio.file.Paths
+import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.CountDownLatch
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 /** `graft.net.ServerMain <config.json>` — the `cmd/bristle` analog
@@ -13,7 +14,7 @@ import scala.util.control.NonFatal
   * the server from the config file, start the TCP ingest endpoint and
   * optional debug server, run one continuous Structured Streaming
   * landing drain per `landing_dir` table (socket → queue →
-  * micro-batch decode/transcode → idempotent parquet sink, flushing
+  * micro-batch decode/transcode → idempotent DSv2 parquet sink, flushing
   * on the table's `flush_interval`), then block until SIGINT/SIGTERM.
   * SIGHUP reloads the config and drain-and-swaps the landing streams
   * ([[reloadDrains]]): stop at a drain barrier, apply the new
@@ -30,10 +31,21 @@ object ServerMain {
 
   /** Start one landing stream per drain plan. Each micro-batch reads
     * the queue as one slice per configured writer and runs as a single
-    * stage of at most `writers` tasks: decode, transcode and land,
-    * either as the batch's parquet partition or, for a `jdbc_url`
-    * table, as one INSERT transaction per writer (the reference's
+    * job of one stage with at most `writers` tasks: decode, transcode
+    * and land, either as parquet part files that the epoch commit of the
+    * [[graft.streaming.LandingSinkProvider]] sink publishes as the
+    * batch's partition or, for a `jdbc_url` table, as one INSERT
+    * transaction per writer under `foreachBatch` (the reference's
     * per-writer batched INSERT, clickhouse_table_writer.go:115-149).
+    *
+    * A drain that resumes an existing checkpoint (a server restart)
+    * first numbers its new queue's rows on from the checkpoint's latest
+    * planned offset ([[graft.sources.QueueSource.IngestQueue.resumeAt]]):
+    * otherwise the new process's rows, numbered from 0, would sit below
+    * what the resumed drain reads, and its commit would truncate them
+    * unlanded. The replayed last micro-batch then reads nothing, and an
+    * empty epoch leaves what the old process published in place.
+    *
     * One [[DrainListener]] reports the streams to the server's
     * `Metrics` and releases each landed micro-batch's rows from its
     * queue; [[stopDrains]] removes it. Returns the running queries
@@ -45,25 +57,34 @@ object ServerMain {
       server, server.drains.map(d => drainName(d.queueName) -> d.queueName).toMap))
     server.drains.map { d =>
       val landing = Paths.get(d.table.landingDir.get)
-      val ckpt = landing.resolve(".ckpt").toString
-      val out = landing.resolve("data").toString
-      val q = QueueIngest.transcoded(spark, d.queueName, d.table.writers,
+      val ckpt = landing.resolve(".ckpt")
+      server.queues(d.queueName).resumeAt(checkpointedEnd(ckpt).getOrElse(0L))
+      val stream = QueueIngest.transcoded(spark, d.queueName, d.table.writers,
           d.message, d.binding).writeStream
-        .option("checkpointLocation", ckpt)
+        .option("checkpointLocation", ckpt.toString)
         .trigger(Trigger.ProcessingTime(d.table.flushIntervalMs.toLong))
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          d.table.jdbcUrl match {
-            case Some(url) => graft.streaming.JdbcSink.sinkBatch(
-              df, batchId, url, d.table.jdbcTable.getOrElse(d.table.name))
-            case None =>
-              LandingIngest.sinkBatch(df, batchId, out, d.table.writers)
-          }
-        }
         .queryName(drainName(d.queueName))
-        .start()
+      val q = (d.table.jdbcUrl match {
+        case Some(url) => stream.foreachBatch { (df: DataFrame, batchId: Long) =>
+          graft.streaming.JdbcSink.sinkBatch(
+            df, batchId, url, d.table.jdbcTable.getOrElse(d.table.name))
+        }
+        case None => LandingIngest.landTo(stream, landing.resolve("data").toString)
+      }).start()
       d.queueName -> q
     }.toMap
   }
+
+  /** The end offset of the latest micro-batch planned in the drain
+    * checkpoint at `ckpt`: the last line of its newest `offsets/` entry,
+    * the queue being the drain's one source.
+    */
+  private def checkpointedEnd(ckpt: Path): Option[Long] =
+    Option(ckpt.resolve("offsets").toFile.listFiles).toSeq.flatten
+      .flatMap(f => f.getName.toLongOption.map(_ -> f)).maxByOption(_._1)
+      .flatMap { case (_, f) =>
+        Files.readAllLines(f.toPath).asScala.lastOption.flatMap(_.trim.toLongOption)
+      }
 
   private def drainName(queue: String): String = s"drain-$queue"
 

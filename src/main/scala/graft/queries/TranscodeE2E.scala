@@ -160,10 +160,10 @@ object TranscodeE2E {
 
   /** The same 64 fixture rows driven through the STREAMING path
     * (D1-D5) with ONE writer: queue admission → a micro-batch read as
-    * one slice → decode → transcode → foreachBatch parquet append —
-    * then read back. Oracle identical to q25: the streaming pipeline
-    * must land exactly what batch transcode produces (batch-stream
-    * equivalence). q41 lands the same rows with two writers, so the
+    * one slice → decode → transcode → the DSv2 landing sink's part
+    * file, published by its epoch commit — then read back. Oracle
+    * identical to q25: the streaming pipeline must land exactly what
+    * batch transcode produces (batch-stream equivalence). q41 lands the same rows with two writers, so the
     * pair covers the one-slice and the multi-slice plan.
     */
   val q33 = Q(

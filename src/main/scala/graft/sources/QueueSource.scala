@@ -42,11 +42,23 @@ object QueueSource {
     private var first: Long = 0L // seq of log.head
     private var cap = capacity0
     private var policy = onFull0
+    private var resumed = false
 
     def capacity: Int = synchronized(cap)
     def onFull: RowBuffer.OnFull = synchronized(policy)
     def firstSeq: Long = synchronized(first)
     def endSeq: Long = synchronized(first + log.size)
+
+    /** Number the held rows, and the rows that follow, on from `seq`
+      * if that is past [[firstSeq]]: the first call only, made before a
+      * drain resuming an existing checkpoint reads this new queue, `seq`
+      * being the end of the checkpoint's last planned micro-batch. Later
+      * calls (a reload restarting the drain of this live queue, whose
+      * numbering the checkpoint already follows) change nothing.
+      */
+    def resumeAt(seq: Long): Unit = synchronized {
+      if (!resumed) { resumed = true; first = math.max(first, seq) }
+    }
 
     /** New admission settings for the writes that follow. Rows already
       * admitted stay, even above a shrunk capacity: they were acked, and

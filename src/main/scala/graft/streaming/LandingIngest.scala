@@ -2,52 +2,50 @@ package graft.streaming
 
 import graft.bind.Binding
 import graft.proto.{PMessage, ProtoRows}
-import org.apache.hadoop.fs.{Path => FsPath}
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.streaming.DataStreamWriter
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 
-/** The landed table of a streaming ingest drain (D5): the sink every
-  * landing micro-batch writes through, and the consumer-side read and
-  * maintenance of what it wrote.
+/** The landed table of a streaming ingest drain (D5): how a landing
+  * micro-batch writes it, and the consumer-side read and maintenance of
+  * what it wrote.
   *
   * Topology (mirrors reference server.go:79-99 wiring): producer →
   * [[graft.sources.QueueSource]] admission (D1/D7) → Structured
   * Streaming micro-batch, one slice per writer (D3), flushed on the
   * table's interval (D4) → [[QueueIngest.transcoded]] (S3+S4, P1-P10)
-  * → [[sinkBatch]].
+  * → the [[LandingSinkProvider]] DataSourceV2 sink ([[landTo]]).
   *
   * The sink is the Spark analog of the reference's transactional
-  * batched INSERT (clickhouse_table_writer.go:115-149): each
-  * micro-batch is staged whole, then renamed into its own
-  * batchId-keyed partition, so a micro-batch replay is idempotent.
+  * batched INSERT (clickhouse_table_writer.go:115-149): the micro-batch's
+  * own tasks stage its part files, and its epoch commit renames them
+  * into the batchId-keyed partition, so a micro-batch replay is
+  * idempotent.
   */
 object LandingIngest {
 
-  /** D5 sink: one micro-batch = one `p_batch=<batchId>` partition,
-    * written by at most `numWriters` tasks (D3; `coalesce` is narrow,
-    * so a source that already reads one partition per writer lands in
-    * a single stage). The batch is written whole into a hidden staging
-    * dir, then one directory rename publishes it. A replay after a
-    * crash replaces the staged leftovers and any partition the crashed
-    * attempt already published, so it lands exactly once — actually
-    * idempotent, not by convention (ADVICE r2 #3). The staging name
-    * starts with `.`: Spark's file listing skips such paths, while a
-    * `_`-prefixed name containing `=` would be read as a partition.
+  private val Sink = classOf[LandingSinkProvider].getName
+
+  /** `stream` landing under `outDir` through the [[LandingSinkProvider]]
+    * sink: each micro-batch's tasks write its part files, and its epoch
+    * commit publishes them as `p_batch=<batchId>`.
+    */
+  def landTo[T](stream: DataStreamWriter[T], outDir: String): DataStreamWriter[T] =
+    stream.format(Sink).option("path", outDir)
+
+  /** D5 for one frame: lands `df` as micro-batch `batchId` of the table
+    * at `outDir`, through the same sink and epoch commit as a streaming
+    * drain (a DSv2 batch write), written by at most `numWriters` tasks
+    * (D3; `coalesce` is narrow, so a source that already reads one
+    * partition per writer lands in a single stage). A replay lands
+    * exactly once; a frame with no rows publishes nothing.
     */
   def sinkBatch(df: DataFrame, batchId: Long, outDir: String,
-      numWriters: Int): Unit = {
-    val out = new FsPath(outDir)
-    val fs = out.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    val staging = new FsPath(out, s".staging-p_batch=$batchId")
-    val part = new FsPath(out, s"p_batch=$batchId")
-    fs.delete(staging, true)
-    df.coalesce(numWriters).write.parquet(staging.toString)
-    fs.delete(part, true)
-    if (!fs.rename(staging, part))
-      throw new java.io.IOException(s"could not rename $staging to $part")
-  }
+      numWriters: Int): Unit =
+    df.coalesce(numWriters).write.format(Sink).option("path", outDir)
+      .option("epoch", batchId).mode("append").save()
 
   /** Consumer-side read of a landed table: the user-facing rows
     * without the sink's `p_batch` bookkeeping partition column (the
@@ -77,13 +75,15 @@ object LandingIngest {
       folded.write.mode("overwrite").partitionBy("p_batch").parquet(tmp))
   }
 
-  /** The landed table at `out` — or, when nothing landed (everything
-    * shed/rejected, a legitimate admission outcome), an empty frame of
-    * the binding's sink schema instead of a missing-path crash.
+  /** The landed table at `out` — or, when no micro-batch published a
+    * partition there (everything shed or rejected, or only empty
+    * micro-batches: legitimate admission outcomes), an empty frame of the
+    * binding's sink schema instead of a missing-path crash.
     */
   private[streaming] def landedOrEmpty(spark: SparkSession, out: Path,
       message: PMessage, binding: Binding): DataFrame =
-    if (Files.exists(out)) readLanded(spark, out.toString)
+    if (Option(out.toFile.list()).exists(_.exists(_.startsWith("p_batch="))))
+      readLanded(spark, out.toString)
     else binding.transcode(ProtoRows.decode(
       spark.emptyDataset(Encoders.BINARY), message))
 }

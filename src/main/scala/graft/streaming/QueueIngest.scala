@@ -11,10 +11,10 @@ import java.nio.file.Files
 /** The ingest drain: admit message batches through the
   * [[QueueSource]]'s own admission control, stream them out of its
   * MicroBatchStream, decode + transcode, and land with the idempotent
-  * batch sink — S1/S2's engine contract end-to-end through a real
-  * DataSourceV2 source. The server's continuous drains
-  * ([[graft.net.ServerMain.startDrains]]) run the same [[transcoded]]
-  * stream.
+  * [[LandingSinkProvider]] sink — S1/S2's engine contract end-to-end
+  * through a real DataSourceV2 source and sink. The server's continuous
+  * drains ([[graft.net.ServerMain.startDrains]]) run the same
+  * [[transcoded]] stream.
   */
 object QueueIngest {
 
@@ -52,19 +52,17 @@ object QueueIngest {
   /** Drain an EXISTING queue (filled by any producer — in-process
     * writes or the [[graft.net.IngestServer]] socket path) through the
     * MicroBatchStream → decode → transcode → idempotent-sink pipeline
-    * (one stage per micro-batch, one task per writer), returning the
-    * landed frame. Does not own the queue's lifecycle:
-    * the caller created it and decides when to drop it.
+    * (one job of one stage per micro-batch, one task per writer, each
+    * writing its own part file), returning the landed frame. Does not
+    * own the queue's lifecycle: the caller created it and decides when
+    * to drop it.
     */
   def drain(spark: SparkSession, name: String, message: PMessage,
       binding: Binding, numWriters: Int = 2): DataFrame = {
     val base = Files.createTempDirectory("graft-queue-ingest-")
     val outDir = base.resolve("out").toString
-    val sq = transcoded(spark, name, numWriters, message, binding).writeStream
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        LandingIngest.sinkBatch(df, batchId, outDir, numWriters)
-      }
+    val sq = LandingIngest.landTo(transcoded(spark, name, numWriters, message, binding)
+      .writeStream.option("checkpointLocation", base.resolve("ckpt").toString), outDir)
       .start()
     sq.processAllAvailable()
     sq.stop()

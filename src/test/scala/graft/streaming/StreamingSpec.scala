@@ -209,6 +209,64 @@ class StreamingSpec extends SparkSpec {
     assert(files.count { case (b, _) => !beforeReload(b) } == 5, files)
   }
 
+  /** One server incarnation on the landing config at `dir`: write
+    * `before` while no drain runs, start the drains, write `after`, land
+    * everything and stop. Every batch must be acked `OK`.
+    */
+  private def incarnation(dir: java.nio.file.Path, before: Seq[Array[Byte]],
+      after: Seq[Array[Byte]]): Unit = {
+    import graft.net.{BristleServer, IngestClient, LandingConfig, Metrics, ServerMain}
+    import graft.net.ControlProto.BatchResult
+    val server = new BristleServer(LandingConfig.write(dir), new Metrics).start()
+    val client = new IngestClient("127.0.0.1", server.ingest.boundPort)
+    var drains = Map.empty[String, org.apache.spark.sql.streaming.StreamingQuery]
+    def write(rows: Seq[Array[Byte]]): Unit = if (rows.nonEmpty)
+      assert(client.writeBatch("ExampleMessage", rows, 0) == BatchResult.Ok)
+    try {
+      client.registerType("ExampleMessage")
+      write(before)
+      drains = ServerMain.startDrains(spark, server)
+      drains.values.foreach(_.processAllAvailable())
+      write(after)
+      drains.values.foreach(_.processAllAvailable())
+    } finally {
+      ServerMain.stopDrains(drains)
+      client.close()
+      server.stop()
+      server.queues.keys.foreach(QueueSource.drop)
+    }
+  }
+
+  private def encoded = TranscodeE2E.fixtures
+    .map(f => ProtoRows.encodeValues(TranscodeE2E.message, f.protoValues))
+
+  test("a server restarted on an existing checkpoint lands every acked row once") {
+    // the new process's queue numbers rows from 0 again; the drain
+    // resuming the old checkpoint must still land them
+    val dir = java.nio.file.Files.createTempDirectory("graft-restart-")
+    val msgs = encoded
+    incarnation(dir, Nil, msgs.take(16))
+    incarnation(dir, msgs.slice(16, 20), msgs.slice(20, 24))
+    val landed = LandingIngest.readLanded(spark, dir.resolve("land/data").toString)
+    assert(landed.select("value").collect().map(_.getLong(0)).sorted.toSeq ==
+      TranscodeE2E.fixtures.take(24).map(_.value).sorted)
+  }
+
+  test("a drain started on an empty queue leaves no empty partition") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-empty-start-")
+    incarnation(dir, Nil, encoded.take(16))
+    // the drain's first micro-batch read the empty queue
+    val offsets0 = java.nio.file.Files.readAllLines(dir.resolve("land/.ckpt/offsets/0"))
+    assert(offsets0.get(offsets0.size - 1).trim == "0")
+    val data = dir.resolve("land/data")
+    val parts = data.toFile.list().filter(_.startsWith("p_batch=")).toSeq
+    assert(parts.nonEmpty && !parts.contains("p_batch=0"), parts)
+    parts.foreach { p =>
+      assert(data.resolve(p).toFile.list().exists(_.endsWith(".parquet")), p)
+    }
+    assert(LandingIngest.readLanded(spark, data.toString).count() == 16)
+  }
+
   test("P11 lenient decode dead-letters bad rows; parity path still fails whole batch") {
     import graft.proto.Wire
     import spark.implicits._
