@@ -328,23 +328,24 @@ object TextOps extends Serializable {
   // Learns the first N byte-pair merges of the corpus. The vocab form
   // is THE 100 TB shape: the corpus is scanned ONCE (word → count,
   // one shuffle); every merge round then runs on the distinct-word
-  // vocabulary — pair counts are an aggregate of vocab-sized data, and
-  // the only driver state per round is the single argmax pair (the
-  // same bounded-collect contract as the Lloyd loops in Similarity).
+  // vocabulary, and the only state that leaves it is the merge list.
+  // One learner ([[bpeLearn]]) serves training (q115) and encoding
+  // (q145); [[bpeApply]] folds its merges onto a vocabulary.
   //
   // Symbol sequences ride in ONE string column: each symbol is
   // individually wrapped in U+001F, so applying a
   // merge is a plain `replace` of the fully-delimited pair — string
-  // replace scans left-to-right non-overlapping in both Spark and
-  // DuckDB, which is exactly BPE's greedy merge pass ("aaa" + merge
-  // (a,a) → [aa, a]), and full wrapping means a pattern can never
-  // match a symbol's suffix/prefix. Ties break (count desc, left asc,
-  // right asc) — a total order, so the learned table is deterministic.
+  // replace scans left-to-right non-overlapping in Spark, DuckDB and
+  // Java's `String.replace`, which is exactly BPE's greedy merge pass
+  // ("aaa" + merge (a,a) → [aa, a]), and full wrapping means a
+  // pattern can never match a symbol's suffix/prefix. Ties break
+  // (count desc, left asc, right asc) in Spark's string order — a
+  // total order, so the learned table is deterministic.
 
   private val BpeSep = "\u001f"
 
-  /** Word vocabulary with each word as a wrapped symbol string:
-    * characters plus a terminal `</w>` marker symbol.
+  /** Word vocabulary (w, s, cnt) with each word as a wrapped symbol
+    * string: characters plus a terminal `</w>` marker symbol.
     */
   private[graft] def bpeVocab(docs: org.apache.spark.sql.DataFrame,
       textCol: String): org.apache.spark.sql.DataFrame = {
@@ -352,7 +353,7 @@ object TextOps extends Serializable {
     docs.select(explode(split(col(textCol), " ")).as("w"))
       .filter(col("w") =!= "")
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-      .select(
+      .select(col("w"),
         concat(lit(BpeSep),
           array_join(filter(split(col("w"), ""), x => x =!= ""), ss),
           lit(ss + "</w>" + BpeSep)).as("s"),
@@ -376,47 +377,110 @@ object TextOps extends Serializable {
       .agg(sum(col("cnt")).as("c"))
   }
 
+  /** `vocab` with `merges` (lhs, rhs, …) applied in order: one
+    * `replace` of the wrapped pair per merge.
+    */
+  private[graft] def bpeApply(vocab: org.apache.spark.sql.DataFrame,
+      merges: Seq[(String, String, Long)]): org.apache.spark.sql.DataFrame =
+    merges.foldLeft(vocab) { case (v, (l, r, _)) =>
+      // literal Columns, not string-interpolated SQL: a learned
+      // symbol containing a quote/backslash must not be able to
+      // break (or inject into) a parsed expression
+      v.withColumn("s", call_function("replace", col("s"),
+        lit(BpeSep + l + BpeSep + BpeSep + r + BpeSep),
+        lit(BpeSep + l + r + BpeSep)))
+    }
+
+  /** The first `n` merges (lhs, rhs, pair count) learned on a cached
+    * vocabulary (s, cnt) — fewer once no word has a pair left. The
+    * measured vocabulary size picks one of two exact paths: at or
+    * below `AdaptiveShape.smallRows` words every round runs in one
+    * task ([[bpeLearnInTask]]); above it the rounds are SQL
+    * aggregates under the caller's session ([[bpeLearnRounds]]).
+    */
+  private[graft] def bpeLearn(vocab: org.apache.spark.sql.DataFrame,
+      n: Int): Seq[(String, String, Long)] =
+    if (vocab.count() <= graft.operators.AdaptiveShape.smallRows)
+      bpeLearnInTask(vocab, n)
+    else bpeLearnRounds(vocab, n)
+
+  /** [[bpeLearn]] as distributed rounds: per round one pair aggregate
+    * and a 1-row TakeOrdered collect, then the merge joins the
+    * vocabulary's `replace` chain.
+    */
+  private[graft] def bpeLearnRounds(vocab: org.apache.spark.sql.DataFrame,
+      n: Int): Seq[(String, String, Long)] = {
+    var v = vocab
+    Iterator.range(0, n).map { _ =>
+      bpePairs(v).orderBy(col("c").desc, col("l").asc, col("r").asc)
+        .limit(1).collect().headOption.map { b =>
+          val m = (b.getString(0), b.getString(1), b.getLong(2))
+          v = bpeApply(v, Seq(m))
+          m
+        }
+    }.takeWhile(_.nonEmpty).flatten.toList
+  }
+
+  /** Spark's string order: unsigned UTF-8 bytes, i.e. code points —
+    * not `String.compareTo`'s UTF-16 units, which put a surrogate
+    * pair below U+E000..U+FFFF.
+    */
+  private[graft] val sparkStringOrder: Ordering[String] = (a, b) =>
+    java.util.Arrays.compareUnsigned(
+      a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+      b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
+  /** [[bpeLearn]] in ONE task over the (cached) vocabulary: each round
+    * recounts the weighted adjacent pairs of every word, takes the
+    * (count desc, lhs asc, rhs asc) best in [[sparkStringOrder]] and
+    * merges it with `String.replace`. The symbols split as Spark's
+    * `split` does (limit −1), so each round equals the SQL round.
+    * Only the merge list leaves the task.
+    */
+  private[graft] def bpeLearnInTask(vocab: org.apache.spark.sql.DataFrame,
+      n: Int): Seq[(String, String, Long)] = {
+    import vocab.sparkSession.implicits._
+    vocab.select(col("s"), col("cnt")).coalesce(1).as[(String, Long)]
+      .mapPartitions { it =>
+        val words = it.toArray
+        val sep2 = java.util.regex.Pattern.compile(BpeSep + BpeSep)
+        val best = Ordering.by((p: ((String, String), Long)) =>
+          (-p._2, p._1._1, p._1._2))(
+          Ordering.Tuple3(Ordering.Long, sparkStringOrder, sparkStringOrder))
+        Iterator.range(0, n).map { _ =>
+          val pairs = scala.collection.mutable.HashMap.empty[(String, String), Long]
+          for ((s, cnt) <- words; ys = sep2.split(s.substring(1, s.length - 1), -1);
+               i <- 1 until ys.length)
+            pairs((ys(i - 1), ys(i))) = pairs.getOrElse((ys(i - 1), ys(i)), 0L) + cnt
+          pairs.minOption(best).map { case ((l, r), c) =>
+            val (pat, rep) = (BpeSep + l + BpeSep + BpeSep + r + BpeSep,
+              BpeSep + l + r + BpeSep)
+            words.mapInPlace { case (s, cnt) => (s.replace(pat, rep), cnt) }
+            (l, r, c)
+          }
+        }.takeWhile(_.nonEmpty).flatten
+      }
+      .collect().toSeq
+  }
+
   /** The first `n` learned merges: (merge_rank, lhs, rhs, merged,
-    * pair_count). One corpus scan, then `n` vocab-sized rounds with a
-    * 1-row collect each.
+    * pair_count). One corpus scan, then the [[bpeLearn]] rounds on the
+    * cached vocabulary.
     */
   def bpeMerges(docs: org.apache.spark.sql.DataFrame, textCol: String,
+      n: Int): org.apache.spark.sql.DataFrame =
+    bpeMergesWith(bpeLearn)(docs, textCol, n)
+
+  private[graft] def bpeMergesWith(
+      learn: (org.apache.spark.sql.DataFrame, Int) => Seq[(String, String, Long)])(
+      docs: org.apache.spark.sql.DataFrame, textCol: String,
       n: Int): org.apache.spark.sql.DataFrame = {
     val spark = docs.sparkSession
-    // cache handle kept separate from the loop var: CacheManager
-    // unpersists by plan identity, so unpersisting the round-k DERIVED
-    // frame would leave the cached base blocks pinned for the session
     val cached = bpeVocab(docs, textCol).cache()
-    val vocabRows = cached.count() // materialize: every round re-reads this
-    val merges = scala.collection.mutable.ArrayBuffer
-      .empty[(Int, String, String, String, Long)]
-    try {
-      // the n rounds are vocabulary-sized TakeOrdered jobs over the
-      // measured cache — summary-frame loop shape (AdaptiveShape,
-      // session-isolated; only the collected merge rows leave)
-      graft.operators.AdaptiveShape.withLoopFrame(cached, vocabRows) { v0 =>
-      var vocab: org.apache.spark.sql.DataFrame = v0
-      for (k <- 1 to n) {
-        val best = bpePairs(vocab)
-          .orderBy(col("c").desc, col("l").asc, col("r").asc)
-          .limit(1).collect()
-        if (best.nonEmpty) {
-          val (l, r, c) =
-            (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-          merges += ((k, l, r, l + r, c))
-          // literal Columns, not string-interpolated SQL: a learned
-          // symbol containing a quote/backslash must not be able to
-          // break (or inject into) a parsed expression
-          val pat = lit(BpeSep + l + BpeSep + BpeSep + r + BpeSep)
-          vocab = vocab.withColumn("s",
-            call_function("replace", col("s"), pat,
-              lit(BpeSep + l + r + BpeSep)))
-        }
-      }
-      }
-    } finally cached.unpersist(false)
+    val merges = try learn(cached, n) finally cached.unpersist(false)
     import spark.implicits._
-    merges.toSeq
+    merges.zipWithIndex
+      .map { case ((l, r, c), k) => (k + 1, l, r, l + r, c) }
       .toDF("merge_rank", "lhs", "rhs", "merged", "pair_count")
       .orderBy(col("merge_rank"))
   }
@@ -484,62 +548,33 @@ object TextOps extends Serializable {
   // q115 learns the table; this applies it — the fertility audit a
   // tokenizer build runs before committing (tokens/word under the
   // LEARNED vocab, vs q28's fixed-regex proxy). The corpus is never
-  // re-tokenized row by row: merges act on the distinct-word
-  // vocabulary (the same n rounds as training — replay, not storage),
-  // the per-word symbol count is read off the final vocab, and the
-  // corpus joins to that vocab-sized frame on the word key.
+  // re-tokenized row by row: the merges are learned once on the
+  // distinct-word vocabulary ([[bpeLearn]]) and applied once to it
+  // ([[bpeApply]]), the per-word symbol count is read off the merged
+  // vocab, and the corpus joins to that vocab-sized frame on the word
+  // key.
 
   /** Per-source token counts under the first `n` learned BPE merges:
     * (source, n_words, bpe_tokens, tokens_per_word). Same
-    * one-corpus-scan + n vocab-sized-rounds shape as [[bpeMerges]];
-    * the final encode is a (source, word)-collapsed join against the
+    * one-corpus-scan + learner shape as [[bpeMerges]]; the final
+    * encode is a (source, word)-collapsed join against the
     * vocab-sized symbol-count frame — corpus text never moves twice.
     */
   def bpeEncodedCounts(docs: org.apache.spark.sql.DataFrame,
       textCol: String, srcCol: String, n: Int)
-      : org.apache.spark.sql.DataFrame = {
-    val ss = BpeSep + BpeSep
-    val cached = docs
-      .select(explode(split(col(textCol), " ")).as("w"))
-      .filter(col("w") =!= "")
-      .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-      .select(col("w"),
-        concat(lit(BpeSep),
-          array_join(filter(split(col("w"), ""), x => x =!= ""), ss),
-          lit(ss + "</w>" + BpeSep)).as("s"),
-        col("cnt"))
-      .cache()
-    val vocabRows = cached.count()
+      : org.apache.spark.sql.DataFrame =
+    bpeEncodedCountsWith(bpeLearn)(docs, textCol, srcCol, n)
+
+  private[graft] def bpeEncodedCountsWith(
+      learn: (org.apache.spark.sql.DataFrame, Int) => Seq[(String, String, Long)])(
+      docs: org.apache.spark.sql.DataFrame, textCol: String, srcCol: String,
+      n: Int): org.apache.spark.sql.DataFrame = {
     // the encode join CONSUMES the vocab cache lazily (the caller's
     // action runs after this returns), so release rides the
-    // end-of-query drain — the old finally-unpersist dropped the
-    // blocks before that action and the join re-aggregated the
-    // corpus words from scratch
-    graft.pipeline.Similarity.registerForRelease(cached)
-    // merge replay: vocabulary-sized rounds (AdaptiveShape,
-    // session-isolated); the corpus-scale encode join below plans
-    // OUTSIDE the small shape — the final vocab frame ESCAPES the
-    // block, so it is rebound to the caller's session
-    val vocabOut = graft.operators.AdaptiveShape.withLoopFrame(
-        cached, vocabRows) { v0 =>
-      var vocab: org.apache.spark.sql.DataFrame = v0
-      for (_ <- 1 to n) {
-        val best = bpePairs(vocab)
-          .orderBy(col("c").desc, col("l").asc, col("r").asc)
-          .limit(1).collect()
-        if (best.nonEmpty) {
-          val (l, r) = (best(0).getString(0), best(0).getString(1))
-          val pat = lit(BpeSep + l + BpeSep + BpeSep + r + BpeSep)
-          vocab = vocab.withColumn("s",
-            call_function("replace", col("s"), pat,
-              lit(BpeSep + l + r + BpeSep)))
-        }
-      }
-      vocab
-    }
-    val vocabFinal = graft.operators.AdaptiveShape.rebind(vocabOut,
-      docs.sparkSession)
-    val perWord = vocabFinal.select(col("w"),
+    // end-of-query drain
+    val cached = graft.pipeline.Similarity.registerForRelease(
+      bpeVocab(docs, textCol).cache())
+    val perWord = bpeApply(cached, learn(cached, n)).select(col("w"),
       size(split(substring(col("s"), lit(2), length(col("s")) - 2),
         BpeSep + BpeSep)).cast("long").as("toks"))
     docs.select(col(srcCol).as("source"),

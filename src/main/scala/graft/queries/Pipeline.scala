@@ -1249,9 +1249,10 @@ object Pipeline {
 
   /** Per-label embedding centroids — the class-prototype computation
     * under clustering, retrieval calibration, and drift monitoring.
-    * Plan shape: posexplode → (label, dim) partial sums — the same
-    * distributed update step Similarity.lloydCentroids uses inside
-    * k-means, here surfaced as an oracle-checked query. Components go
+    * Plan shape: posexplode → (label, dim) partial sums — the
+    * fixed-point update Similarity.lloydCentroids computes per round
+    * (there as per-(cluster, dim) long sums in one treeAggregate),
+    * here surfaced as an oracle-checked query. Components go
     * through floor(x·1e6) fixed point (the q57 discipline: float→
     * double is exact, the double multiply and floor agree across
     * engines), so every sum is an exact integer and the centroid is
@@ -1764,8 +1765,8 @@ object Pipeline {
     * 2-round iteration — init, two updates, three assignments — and
     * the per-cluster memberships and distance sums must match
     * exactly. The same `Similarity.lloydCentroids` core also trains
-    * the q38 IVF quantizer; shuffle volume is k·dim summary rows per
-    * round, vectors never move.
+    * the q38 IVF quantizer; each round is one pass over the vectors
+    * whose only output is k·dim partial sums, vectors never move.
     */
   val q84 = {
     val k = 8

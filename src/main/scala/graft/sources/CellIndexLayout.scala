@@ -34,15 +34,13 @@ object CellIndexLayout {
       nlist: Int = 16, rounds: Int = 2): String = {
     val spark = history.sparkSession
     import spark.implicits._
-    val hbase = history
-      .select(col(idCol).cast("long").as("id"),
-        col(vecCol).cast("array<double>").as("vd"))
+    val hbase = Similarity.vectors(history, idCol, vecCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cents = Similarity.lloydCentroids(hbase, nlist, rounds)
     cents.toSeq.toDF("cid", "c").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/centroids")
     val bc = spark.sparkContext.broadcast(cents)
-    val assign = udf { (vd: Seq[Double]) =>
+    val assign = udf { (vd: Array[Double]) =>
       // min by (dist, cid) — the cellsOf sortBy(identity) tie rule
       var best = Long.MaxValue; var bid = Long.MaxValue
       bc.value.foreach { case (cid, c) =>
@@ -77,7 +75,7 @@ object CellIndexLayout {
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
     val bc = spark.sparkContext.broadcast(cents)
-    val assign = udf { (vd: Seq[Double]) =>
+    val assign = udf { (vd: Array[Double]) =>
       var best = Long.MaxValue; var bid = Long.MaxValue
       bc.value.foreach { case (cid, c) =>
         val d = Similarity.distFpJvm(vd, c)
@@ -85,9 +83,7 @@ object CellIndexLayout {
       }
       bid
     }
-    vectors
-      .select(col(idCol).cast("long").as("id"),
-        col(vecCol).cast("array<double>").as("vd"))
+    Similarity.vectors(vectors, idCol, vecCol)
       .withColumn("cell", assign(col("vd")))
       .repartition(col("cell"))
       .sortWithinPartitions(col("id"))
@@ -110,7 +106,7 @@ object CellIndexLayout {
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
     val bc = spark.sparkContext.broadcast(cents)
-    val probeCells = udf { (vd: Seq[Double]) =>
+    val probeCells = udf { (vd: Array[Double]) =>
       bc.value.map { case (cid, c) => (Similarity.distFpJvm(vd, c), cid) }
         .sortBy(identity).take(nprobe).map(_._2)
     }

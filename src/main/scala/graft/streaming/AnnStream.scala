@@ -31,12 +31,7 @@ object AnnStream {
       rounds: Int = 2)(sink: (DataFrame, Long) => Unit): StreamingQuery = {
     import org.apache.spark.sql.functions.col
     // train once — the stream never pays for (or perturbs) the index
-    val hbase = history
-      .select(col(idCol).cast("long").as("id"),
-        col(vecCol).cast("array<double>").as("vd"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cents = Similarity.lloydCentroids(hbase, nlist, rounds)
-    hbase.unpersist(blocking = false)
+    val cents = Similarity.trainCentroids(history, idCol, vecCol, nlist, rounds)
     stream.writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
         if (!batch.isEmpty) {

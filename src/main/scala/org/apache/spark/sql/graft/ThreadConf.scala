@@ -1,42 +1,7 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
-
-/** Session-isolation shim for summary-frame loops (the fix for
-  * VERDICT r17 #2): the loop posture (derived partition count, AQE
-  * stage scheduling off) must never be observable by a concurrent
-  * planner on another thread of the same session. A thread-local
-  * SQLConf is NOT enough — `InsertAdaptiveSparkPlan` deliberately
-  * reads the SESSION conf (`adaptiveExecutionContext.session`), so
-  * the AQE toggle only scopes via a separate session. `cloneSession`
-  * copies the current session state (conf, registered functions) into
-  * a new session whose conf is then overridden in place; datasets
-  * cross sessions by REBINDING their physical RDD
-  * (`internalCreateDataFrame` over `queryExecution.toRdd` — zero row
-  * conversion; each action re-evaluates the underlying plan exactly
-  * as a same-session reference would). All three members are
-  * `private[sql]`, hence this shim package.
-  */
-object GraftSession {
-  def cloneWithConf(spark: SparkSession,
-      overrides: Seq[(String, String)]): SparkSession = {
-    val c = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .cloneSession()
-    overrides.foreach { case (k, v) => c.conf.set(k, v) }
-    c
-  }
-
-  /** `df`'s rows as a frame of session `to` — the physical plan rides
-    * along as an RDD boundary, so caches/checkpoints behind `df` keep
-    * serving it; no row conversion, no recomputation beyond what a
-    * same-session reference would pay.
-    */
-  def rebind(df: DataFrame, to: SparkSession): DataFrame =
-    if (df.sparkSession eq to) df
-    else to.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .internalCreateDataFrame(df.queryExecution.toRdd, df.schema)
-}
 
 /** Column ⇄ Expression bridge (Spark 4 moved Column onto ColumnNode,
   * so a custom Expression that carries a RUNTIME value — e.g. a

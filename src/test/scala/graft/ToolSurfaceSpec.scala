@@ -6,8 +6,9 @@ import scala.jdk.CollectionConverters._
 
 /** Guards the tool surface against drift: every SPARK_GRAFT_* knob and
   * every main in src/main/scala has a row in README's "Tools and knobs"
-  * tables, and SparkSessions are built only by the shared local builder
-  * and the server. A new knob or tool needs a README line; a copied
+  * tables, SparkSessions are built only by the shared local builder
+  * and the server, and no operator clones a session or moves a frame
+  * between sessions. A new knob or tool needs a README line; a copied
   * builder fails outright.
   */
 class ToolSurfaceSpec extends AnyFunSuite {
@@ -60,5 +61,12 @@ class ToolSurfaceSpec extends AnyFunSuite {
     val sites = sources.collect {
       case (f, s) if s.contains("SparkSession.builder()") => f }.toSet
     assert(sites == Set("graft/SparkEntry.scala", "graft/net/ServerMain.scala"))
+  }
+
+  test("no operator clones a session or rebinds a frame onto another") {
+    val sites = sources.collect {
+      case (f, s) if Seq("cloneSession", "internalCreateDataFrame")
+        .exists(s.contains) => f }
+    assert(sites.isEmpty)
   }
 }

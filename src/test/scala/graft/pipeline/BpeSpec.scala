@@ -4,18 +4,33 @@ import graft.SparkSpec
 
 /** BPE merge training (TextOps.bpeMerges) — pins the algorithm edges
   * the q115 oracle replays: greedy left-to-right non-overlapping merge,
-  * deterministic tie-breaks, merged symbols composing in later rounds,
-  * and the terminal `</w>` marker participating as a symbol.
+  * deterministic tie-breaks in Spark's string order, merged symbols
+  * composing in later rounds, and the terminal `</w>` marker
+  * participating as a symbol. Every case runs on BOTH learners the
+  * vocabulary size picks between — the one-task kernel and the SQL
+  * rounds — and they must agree.
   */
 class BpeSpec extends SparkSpec {
   import spark.implicits._
+  import org.apache.spark.sql.DataFrame
+
+  private val learners: Seq[(String, (DataFrame, Int) => Seq[(String, String, Long)])] =
+    Seq("kernel" -> TextOps.bpeLearnInTask, "rounds" -> TextOps.bpeLearnRounds)
+
+  /** The same value from every learner. */
+  private def agreed[A](f: ((DataFrame, Int) => Seq[(String, String, Long)]) => A): A = {
+    val out = learners.map { case (name, l) => name -> f(l) }
+    out.foreach { case (name, a) =>
+      assert(a == out.head._2, s"$name: $a vs ${out.head._1}: ${out.head._2}") }
+    out.head._2
+  }
 
   private def merges(docs: Seq[String], n: Int): Seq[(Int, String, String, String, Long)] =
-    TextOps.bpeMerges(docs.toDF("text"), "text", n)
+    agreed(l => TextOps.bpeMergesWith(l)(docs.toDF("text"), "text", n)
       .collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getString(3),
         r.getLong(4)))
-      .toSeq
+      .toSeq)
 
   test("greedy left-to-right merge is non-overlapping: aaa -> [aa, a]") {
     // word "aaa" x2: symbols a a a </w>; round 1 counts the OVERLAPPING
@@ -55,6 +70,11 @@ class BpeSpec extends SparkSpec {
     assert(m(1)._5 == 1L) // some pair of "bc" with count 1
   }
 
+  test("rounds past full collapse learn nothing more") {
+    // "ab" collapses to one symbol after (a,b) and (ab,</w>)
+    assert(merges(Seq("ab ab"), 5).map(_._4) == Seq("ab", "ab</w>"))
+  }
+
   test("encode applies the learned merges (q145's per-word symbol counts)") {
     import org.apache.spark.sql.functions.col
     // corpus "aaa" x2 (one source): the 3-round trace above ends with
@@ -62,13 +82,41 @@ class BpeSpec extends SparkSpec {
     // "aaa" to 1 token; at 2 merges the vocab is [aa, a</w>] → 2;
     // at 0 merges it's the 4 raw symbols a a a </w>
     val docs = Seq(("s1", "aaa aaa")).toDF("source", "text")
-    def counts(n: Int): (Long, Long) = {
-      val r = TextOps.bpeEncodedCounts(docs, "text", "source", n)
+    def counts(n: Int): (Long, Long) = agreed { l =>
+      val r = TextOps.bpeEncodedCountsWith(l)(docs, "text", "source", n)
         .select(col("n_words"), col("bpe_tokens")).collect()(0)
       (r.getLong(0), r.getLong(1))
     }
     assert(counts(0) == ((2L, 8L)))
     assert(counts(2) == ((2L, 4L)))
     assert(counts(3) == ((2L, 2L)))
+  }
+
+  test("ties order strings by code point, as Spark does, not by UTF-16 unit") {
+    // (U+1F600, </w>) and (U+FF21, </w>) tie at count 1. Spark orders
+    // by UTF-8 bytes, so U+FF21 < U+1F600 and the fullwidth A merges
+    // first; String.compareTo sees the surrogate 0xD83D < 0xFF21 and
+    // would pick the emoji.
+    val (emoji, wide) = ("\uD83D\uDE00", "\uFF21")
+    assert(emoji.compareTo(wide) < 0)
+    assert(TextOps.sparkStringOrder.compare(wide, emoji) < 0)
+    val m = merges(Seq(s"$emoji $wide"), 2)
+    assert(m(0) == ((1, wide, "</w>", wide + "</w>", 1L)))
+    assert(m(1) == ((2, emoji, "</w>", emoji + "</w>", 1L)))
+  }
+
+  test("training and encoding keep the caller's session and conf") {
+    import org.apache.spark.sql.functions.col
+    val before = spark.conf.getAll
+    val docs = Seq(("s1", "low lower lowest"), ("s2", "newer wider"))
+      .toDF("source", "text")
+    val m = TextOps.bpeMerges(docs, "text", 4)
+    assert(m.sparkSession eq spark)
+    assert(m.count() == 4)
+    val e = TextOps.bpeEncodedCounts(docs, "text", "source", 4)
+    assert(e.sparkSession eq spark)
+    assert(e.select(col("n_words")).collect().map(_.getLong(0)).sum == 5L)
+    assert(spark.conf.getAll == before)
+    graft.pipeline.Similarity.releaseResult()
   }
 }

@@ -236,6 +236,74 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("PQ codebooks match independent in-memory per-subspace Lloyd exactly") {
+    // trainBooks trains the m subspace books jointly in one pass per
+    // round; each book must equal a plain Lloyd run on that subspace
+    // (init = the k smallest ids' slices, first-wins argmin over the
+    // cid-sorted book, sub-wide centroids of sum(floor(x*1e6))/(n*1e6))
+    val rnd = new scala.util.Random(977)
+    val (n, m, sub, k, rounds) = (60, 3, 4, 6, 3)
+    val data = (0 until n).map(i =>
+      (i.toLong, Seq.fill(m * sub)(math.rint(rnd.nextDouble() * 2000 - 1000) / 1000)))
+    val got = Similarity.trainBooks(data.toDF("id", "vd"), k, rounds, m,
+      Some(sub))
+
+    def distFp(v: Seq[Double], c: Array[Double]): Long =
+      (0 until math.min(v.length, c.length)).map { i =>
+        val e = v(i) - c(i); math.floor(e * e * 1e12).toLong
+      }.sum
+    val init = data.sortBy(_._1).take(k)
+    for (s <- 0 until m) {
+      val vs = data.map { case (id, v) => (id, v.slice(s * sub, (s + 1) * sub)) }
+      var book: Seq[(Long, Array[Double])] = init.map { case (id, v) =>
+        (id, v.slice(s * sub, (s + 1) * sub).toArray) }
+      for (_ <- 1 to rounds) {
+        book = vs
+          .map { case (_, v) =>
+            (book.zipWithIndex.minBy { case ((_, c), j) => (distFp(v, c), j) }
+              ._1._1, v) }
+          .groupBy(_._1).toSeq
+          .map { case (cid, xs) =>
+            cid -> Array.tabulate(sub) { p =>
+              xs.map(x => math.floor(x._2(p) * 1e6).toLong).sum.toDouble /
+                (xs.size * 1e6)
+            }
+          }
+          .sortBy(_._1)
+      }
+      assert(got(s).map(_._1).toSeq == book.map(_._1),
+        s"subspace $s cluster ids differ")
+      got(s).zip(book).foreach { case ((gid, gc), (_, ec)) =>
+        assert(gc.sameElements(ec),
+          s"subspace $s centroid $gid differs: ${gc.toList} vs ${ec.toList}")
+      }
+    }
+  }
+
+  test("Lloyd training keeps the caller's session and leaves its conf as it was") {
+    val before = spark.conf.getAll
+    val v = Similarity.vectors(emb, "vec_id", "embedding")
+    assert(Similarity.lloydCentroids(v, 4, 2).nonEmpty)
+    val asg = Similarity.deterministicKMeans(emb, "vec_id", "embedding", 4, 2)
+    assert(asg.sparkSession eq spark)
+    assert(asg.count() > 0)
+    assert(spark.conf.getAll == before)
+    Similarity.releaseResult()
+  }
+
+  test("k-means and PQ projections go with the end-of-query release") {
+    Similarity.releaseResult()
+    val before = sc.getPersistentRDDs.keySet
+    def added = sc.getPersistentRDDs.keySet.filterNot(before)
+    Similarity.deterministicKMeans(emb, "vec_id", "embedding", 4, 2)
+      .collect()
+    Similarity.pqAdcTopK(emb, "vec_id", "embedding", _ < 5,
+      topK = 3, m = 8, k = 8, rounds = 1).collect()
+    assert(added.nonEmpty)
+    Similarity.releaseResult()
+    assert(added.isEmpty)
+  }
+
   test("edit near-dup: anchor pigeonhole equals brute force; crafted edits found") {
     import spark.implicits._
     val (k, q) = (10, 16)
